@@ -1,6 +1,6 @@
-"""Process-tree CPU and memory, host steal and contention probes, read from
-/proc. The tree is this process and every descendant: the Spark JVM, the
-PySpark daemon and its Python workers."""
+"""Process-tree CPU and memory, read from /proc. The tree is this process
+and every descendant: the Spark JVM, the PySpark daemon and its Python
+workers. The host steal and calibration probes are bench.py's."""
 
 from __future__ import annotations
 
@@ -87,59 +87,6 @@ class RssSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
-
-
-def cpu_jiffies() -> tuple[int, int]:
-    """(total, steal) jiffies of the host from /proc/stat."""
-    with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:]]
-    return sum(vals), vals[7] if len(vals) > 7 else 0
-
-
-def steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
-    total = after[0] - before[0]
-    return 100.0 * (after[1] - before[1]) / total if total > 0 else 0.0
-
-
-def calibrate(threads: int) -> dict:
-    """Fixed-work probes of the host: single-thread einsum GFLOP/s, a
-    64 MB streaming sum (GB/s), and the einsum on `threads` threads."""
-    import numpy as np
-
-    rng = np.random.RandomState(0)
-    a, b = rng.rand(256, 256), rng.rand(256, 256)
-    flop = 2 * 256**3
-
-    def rate(fn, seconds: float) -> float:
-        fn()
-        n, t0 = 0, time.perf_counter()
-        while time.perf_counter() - t0 < seconds:
-            fn()
-            n += 1
-        return n / (time.perf_counter() - t0)
-
-    big = rng.rand(8_000_000)
-    counts = [0] * threads
-    stop = time.perf_counter() + 0.3
-
-    def burn(slot: int) -> None:
-        x, y = a.copy(), b.copy()
-        while time.perf_counter() < stop:
-            np.einsum("ij,jk->ik", x, y)
-            counts[slot] += 1
-
-    t0 = time.perf_counter()
-    pool = [threading.Thread(target=burn, args=(i,)) for i in range(threads)]
-    for t in pool:
-        t.start()
-    for t in pool:
-        t.join()
-    mt = sum(counts) * flop / (time.perf_counter() - t0) / 1e9
-    return {
-        "calib_gflops": rate(lambda: np.einsum("ij,jk->ik", a, b), 0.2) * flop / 1e9,
-        "calib_membw_gbs": rate(big.sum, 0.2) * big.nbytes / 1e9,
-        "calib_mt_gflops": mt,
-    }
 
 
 def process_age_s() -> float:

@@ -11,7 +11,8 @@ elapsed. Every pass writes to a fresh directory, created and removed
 outside the timed region, and its output is checked. The last stdout
 line is one JSON object: {"correct", "attempted", "failed", "metrics"};
 the line before it holds diagnostics (per-pass times, trend, host steal,
-calibration probes).
+calibration probes). Each pass's output digest must equal the one pinned
+in pins.json for its (workload, seed, rows, nproc); see pin.py.
 
 --trace 0 reports the end-to-end metrics. --trace 1 additionally runs a
 traced section (see layers.py) and reports the per-layer metrics; the
@@ -143,9 +144,15 @@ def run_passes(spark, wl, inp: Path, in_rows: int, seconds: float, out: Path, lo
     return passes
 
 
+def pin_key(workload: str, seed: int, rows: int, cores: int) -> str:
+    return f"{workload}/{seed}/{rows}/{cores}"
+
+
 def judge(passes: list[dict], pin: str | None) -> int:
-    """Mark passes whose digest differs from the pin (or, without a pin,
-    from the first pass); return the number of failed passes."""
+    """Mark passes whose digest differs from the pin; return the number of
+    failed passes. A seed without a pin (one outside pin.py's range, or a
+    non-default --rows) can only be checked for passes agreeing with the
+    first one, which is no check when one pass was timed."""
     want = pin or next((p.get("digest") for p in passes if p.get("digest")), None)
     for p in passes:
         if p.get("digest") is not None and p["digest"] != want:
@@ -160,8 +167,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--rows", type=int, help="input rows (default: the workload's size)")
-    ap.add_argument("--warm-rounds", default=",".join(map(str, WARM_ROUNDS)),
-                    help="passes per warm-up round, comma-separated; 0 for none")
     args = ap.parse_args(argv)
 
     def log(msg: str) -> None:
@@ -171,10 +176,10 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, str(HERE))
     import procstat
     import workloads
+    from bench import _calibrate, _cpu_jiffies
 
     wl = workloads.WORKLOADS[args.workload]
     rows = args.rows or wl.rows
-    warm_rounds = [int(n) for n in args.warm_rounds.split(",") if int(n) > 0]
     cores = len(os.sched_getaffinity(0))
 
     t0 = time.perf_counter()
@@ -186,7 +191,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = start_spark(cores)
     try:
         out = WORK / "out" / f"{wl.name}-{os.getpid()}"
-        for i, n in enumerate(warm_rounds):
+        for i, n in enumerate(WARM_ROUNDS):
             outs = [fresh_dir(out.with_name(f"{out.name}-w{j}")) for j in range(n)]
             w0 = time.perf_counter()
             with ThreadPoolExecutor(n) as ex:
@@ -194,18 +199,19 @@ def main(argv: list[str] | None = None) -> int:
                     f.result()
             for o in outs:
                 shutil.rmtree(o, ignore_errors=True)
-            log(f"warm-up round {i + 1}/{len(warm_rounds)}, {n} passes: {time.perf_counter() - w0:.3f} s")
+            log(f"warm-up round {i + 1}/{len(WARM_ROUNDS)}, {n} passes: {time.perf_counter() - w0:.3f} s")
         setup_s = procstat.process_age_s() - gen_s
 
-        jif0 = procstat.cpu_jiffies()
+        jif0, steal0 = _cpu_jiffies()
         with procstat.RssSampler() as rss:
             rss.reset()
             passes = run_passes(spark, wl, inp, rows, args.seconds, out, log)
             peak_rss = rss.peak_mb
-        steal = procstat.steal_pct(jif0, procstat.cpu_jiffies())
-        calib = procstat.calibrate(cores)
+        jif1, steal1 = _cpu_jiffies()
+        steal = 100.0 * (steal1 - steal0) / max(jif1 - jif0, 1)
+        calib = dict(zip(("calib_gflops", "calib_membw_gbs", "calib_mt_gflops"), _calibrate()))
 
-        pin = json.loads(PINS.read_text()).get(f"{wl.name}/{args.seed}/{rows}")
+        pin = json.loads(PINS.read_text()).get(pin_key(wl.name, args.seed, rows, cores))
         layer_metrics: dict = {}
         if args.trace:
             import layers
@@ -234,9 +240,10 @@ def main(argv: list[str] | None = None) -> int:
     }
     diagnostics = {
         "workload": wl.name, "seed": args.seed, "rows": rows, "in_bytes": in_bytes,
-        "cores": cores, "warm_rounds": warm_rounds, "gen_s": gen_s,
+        "cores": cores, "warm_rounds": WARM_ROUNDS, "gen_s": gen_s,
         "pass_wall_s": walls, "pass_cpu_s": [p["cpu_s"] for p in timed],
-        "trend": walls[-1] / walls[0] - 1 if len(walls) > 1 else 0.0,
+        # with one timed pass there is no trend to report
+        "trend": walls[-1] / walls[0] - 1 if len(walls) > 1 else None,
         "digests": sorted({p.get("digest") for p in passes if p.get("digest")}),
         "pinned_digest": pin, "host_steal_pct": steal,
         **calib,

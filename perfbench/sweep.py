@@ -9,7 +9,7 @@ markdown table per workload and run set: median, first and third quartile
 (statistics.quantiles(n=4)), the quartile spread as a share of the median,
 and the sample count; with two run sets, also the shift of the second
 median against the first. It also prints the per-run warm-up trend (last
-over first timed pass).
+over first timed pass; "-" for a run that timed one pass).
 """
 
 from __future__ import annotations
@@ -89,7 +89,7 @@ def summarize(run_dirs: list[Path]) -> None:
             steal = [d["host_steal_pct"] for d, _ in runs]
             bad = sum(r["failed"] for _, r in runs)
             print(f"\nset {i + 1}: failed passes {bad} of {sum(r['attempted'] for _, r in runs)}; "
-                  f"trend last/first-1 per run: {', '.join(f'{t:+.3f}' for t in trends)}; "
+                  f"trend last/first-1 per run: {', '.join('-' if t is None else f'{t:+.3f}' for t in trends)}; "
                   f"host steal %: {', '.join(f'{x:.1f}' for x in steal)}")
 
 

@@ -40,17 +40,17 @@ def _declared(kind: str) -> set[str]:
     return {m["name"] for m in spec[kind]}
 
 
-@pytest.mark.parametrize("workload", ["transcript_filter", "transcript_longturn", "corpus_chain"])
+@pytest.mark.parametrize("workload", ["transcript_filter", "corpus_chain"])
 def test_untraced_run_reports_every_end_to_end_metric(workload):
     r = _result(_run("--workload", workload, "--seed", "3", "--seconds", "1",
-                     "--trace", "0", "--rows", "1500", "--warm-rounds", "0"))
+                     "--trace", "0", "--rows", "1500"))
     assert set(r["metrics"]) == _declared("end_to_end")
     assert all(m["value"] > 0 for m in r["metrics"].values())
 
 
 def test_traced_run_reports_every_layer_and_accounts_for_its_wall():
     r = _result(_run("--workload", "transcript_filter", "--seed", "3", "--seconds", "1",
-                     "--trace", "1", "--rows", "1500", "--warm-rounds", "0"))
+                     "--trace", "1", "--rows", "1500"))
     assert set(r["metrics"]) == _declared("per_layer")
     art = json.loads((BENCH / ".work" / "trace" / "transcript_filter-s3.json").read_text())
     acct = art["accounting"]
