@@ -37,7 +37,7 @@ def main() -> int:
     try:
         for name, wl in workloads.WORKLOADS.items():
             for seed in SEEDS:
-                inp, _ = workloads.ensure_inputs(WORK, wl, seed, wl.rows, cores)
+                inp = workloads.ensure_input(WORK, wl, seed, wl.rows, cores)
                 out = fresh_dir(WORK / "out" / f"pin-{name}-{os.getpid()}")
                 manifest = wl.run_pass(spark, str(inp), str(out))
                 errors, digest = wl.check(wl.rows, str(out), manifest)

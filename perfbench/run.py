@@ -5,22 +5,23 @@
 
 One process per run: it generates the workload's inputs from the seed
 (cached under perfbench/.work/inputs), starts a local[nproc] session,
-warms up with fixed rounds of entry-point passes over the first half of
-the input, then times full passes until `--seconds` of pass time have
-elapsed. Every pass writes to a fresh directory, created and removed
-outside the timed region, and its output is checked. The last stdout
-line is one JSON object: {"correct", "attempted", "failed", "metrics"};
-the line before it holds diagnostics (per-pass times, trend, host steal,
-calibration probes). Each pass's output digest must equal the one pinned
-in pins.json for its (workload, seed, rows, nproc); see pin.py.
+warms up with one entry-point pass over the input, then times passes
+until `--seconds` of pass time have elapsed. Every pass writes to a fresh
+directory, created and removed outside the timed region, and its output
+is checked. The last stdout line is one JSON object: {"correct",
+"attempted", "failed", "metrics"}; the line before it holds diagnostics
+(per-pass times, trend, host steal, calibration probes). Each pass's
+output digest must equal the one pinned in pins.json for its (workload,
+seed, rows, nproc); see pin.py.
 
 --trace 0 reports the end-to-end metrics. --trace 1 additionally runs a
 traced section (see layers.py) and reports the per-layer metrics; the
 span list is written to perfbench/.work/trace/<workload>-s<seed>.json.
 
 Pinned environment (see pin_environment): local[nproc], shuffle and temp
-files under perfbench/.work, driver heap DRIVER_MEM, no console progress
-bars. The benchmark reads and writes only inside the checkout.
+files under perfbench/.work, driver heap DRIVER_MEM, the JVM's C1 compiler
+only (JIT_OPTS), no console progress bars. The benchmark reads and writes
+only inside the checkout.
 """
 
 from __future__ import annotations
@@ -33,7 +34,6 @@ import statistics
 import sys
 import time
 import traceback
-from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
@@ -42,12 +42,13 @@ WORK = HERE / ".work"
 PINS = HERE / "pins.json"
 DRIVER_MEM = "3g"
 
-# Fixed warm-up: rounds of concurrent entry-point passes over the first
-# half of the input, one pass in the first round and two in the others.
-# In a fresh JVM successive passes keep getting faster while the JIT
-# compiles the hot paths; concurrent passes get there in less wall time.
-# README.md ("Warm-up") has the measured slope these rounds are taken from.
-WARM_ROUNDS = (1, 2, 2)
+# The JVM runs with the C1 compiler only. With the default tiered C2 a
+# fresh JVM keeps getting faster for seven or more passes while C2
+# compiles the hot paths, longer than a run can afford to warm up; with C1
+# the passes after one warm-up pass are flat. The warm-up is that one
+# entry-point pass over the timed input, a fixed amount of work counted in
+# setup_s. README.md ("Warm-up") has the measured slopes.
+JIT_OPTS = "-XX:TieredStopAtLevel=1"
 
 END_TO_END = {
     "setup_s": "s", "wall_s": "s", "rows_per_s": "1/s", "cpu_s": "s",
@@ -62,7 +63,7 @@ def pin_environment() -> dict[str, str]:
     os.environ["SPARK_LOCAL_DIRS"] = str(WORK / "spark-local")
     os.environ["TMPDIR"] = str(WORK / "tmp")
     os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEM
-    java_opts = f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={WORK / 'tmp'} -XX:-UsePerfData"
+    java_opts = f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={WORK / 'tmp'} -XX:-UsePerfData {JIT_OPTS}"
     return {
         "spark.local.dir": str(WORK / "spark-local"),
         "spark.ui.showConsoleProgress": "false",
@@ -183,7 +184,7 @@ def main(argv: list[str] | None = None) -> int:
     cores = len(os.sched_getaffinity(0))
 
     t0 = time.perf_counter()
-    inp, warm = workloads.ensure_inputs(WORK, wl, args.seed, rows, cores)
+    inp = workloads.ensure_input(WORK, wl, args.seed, rows, cores)
     gen_s = time.perf_counter() - t0
     in_bytes = dir_bytes(workloads.data_files(str(inp)))
     log(f"inputs ready in {gen_s:.1f} s: {inp}")
@@ -191,15 +192,10 @@ def main(argv: list[str] | None = None) -> int:
     spark = start_spark(cores)
     try:
         out = WORK / "out" / f"{wl.name}-{os.getpid()}"
-        for i, n in enumerate(WARM_ROUNDS):
-            outs = [fresh_dir(out.with_name(f"{out.name}-w{j}")) for j in range(n)]
-            w0 = time.perf_counter()
-            with ThreadPoolExecutor(n) as ex:
-                for f in [ex.submit(wl.run_pass, spark, str(warm), str(o)) for o in outs]:
-                    f.result()
-            for o in outs:
-                shutil.rmtree(o, ignore_errors=True)
-            log(f"warm-up round {i + 1}/{len(WARM_ROUNDS)}, {n} passes: {time.perf_counter() - w0:.3f} s")
+        w0 = time.perf_counter()
+        wl.run_pass(spark, str(inp), str(fresh_dir(out)))
+        shutil.rmtree(out, ignore_errors=True)
+        log(f"warm-up pass: {time.perf_counter() - w0:.3f} s")
         setup_s = procstat.process_age_s() - gen_s
 
         jif0, steal0 = _cpu_jiffies()
@@ -240,7 +236,7 @@ def main(argv: list[str] | None = None) -> int:
     }
     diagnostics = {
         "workload": wl.name, "seed": args.seed, "rows": rows, "in_bytes": in_bytes,
-        "cores": cores, "warm_rounds": WARM_ROUNDS, "gen_s": gen_s,
+        "cores": cores, "jit_opts": JIT_OPTS, "gen_s": gen_s,
         "pass_wall_s": walls, "pass_cpu_s": [p["cpu_s"] for p in timed],
         # with one timed pass there is no trend to report
         "trend": walls[-1] / walls[0] - 1 if len(walls) > 1 else None,

@@ -19,6 +19,7 @@ import json
 import statistics
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
@@ -36,13 +37,15 @@ def run(workload: str, seeds: list[int], out: Path, seconds: int, trace: int) ->
     out.mkdir(parents=True, exist_ok=True)
     for seed in seeds:
         path = out / f"{workload}-s{seed}.out"
+        t0 = time.perf_counter()
         with open(path, "w") as f:
             proc = subprocess.run(
                 [sys.executable, str(HERE / "run.py"), "--workload", workload, "--seed", str(seed),
                  "--seconds", str(seconds), "--trace", str(trace)],
                 stdout=f, stderr=subprocess.DEVNULL, cwd=HERE.parent, timeout=900,
             )
-        print(f"{workload} seed {seed}: exit {proc.returncode}", file=sys.stderr)
+        print(f"{workload} seed {seed}: exit {proc.returncode} after {time.perf_counter() - t0:.1f} s",
+              file=sys.stderr)
 
 
 def load(run_dir: Path) -> dict[str, list[tuple[dict, dict]]]:

@@ -212,17 +212,11 @@ WORKLOADS = {
 }
 
 
-def ensure_inputs(work: Path, wl: Workload, seed: int, rows: int, cores: int) -> tuple[Path, Path]:
-    """Cached (timed input, warm-up input) for (workload, seed, rows).
-
-    The timed input is 2 * cores files; the warm-up input is its first
-    `cores` files, so warm-up passes see the same file and batch shapes
-    on every core. Both are generated on a cache miss."""
-    base = work / "inputs" / f"{wl.name}-s{seed}-n{rows}"
-    full, warm = base / "full", base / "warm"
-    if not (full.exists() and warm.exists()):
-        df = wl.make(seed, rows)
-        write_splits(df, full, 2 * cores)
-        write_splits(df.iloc[: cores * -(-rows // (2 * cores))], warm, cores)
-    return full, warm
+def ensure_input(work: Path, wl: Workload, seed: int, rows: int, cores: int) -> Path:
+    """The cached input for (workload, seed, rows), written as 2 * cores
+    files on a cache miss."""
+    path = work / "inputs" / f"{wl.name}-s{seed}-n{rows}" / "full"
+    if not path.exists():
+        write_splits(wl.make(seed, rows), path, 2 * cores)
+    return path
 
