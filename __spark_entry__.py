@@ -41,87 +41,14 @@ from langid_py_spark.operators import (
     spandedup,
     textstats,
 )
+from langid_py_spark.spark.partitioning import estimate_scan_tasks as _estimate_scan_tasks
+from langid_py_spark.spark.partitioning import spread as _spread
 from langid_py_spark.spark.rules import duckdb_rule_sql, rule_columns
 from langid_py_spark.spark.scrub import duckdb_scrub_sql, scrub_expr
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _estimate_scan_tasks(spark: SparkSession, df: DataFrame) -> int | None:
-    """Upper bound on the scan's non-empty task count from CATALOG facts
-    (file sizes + parquet row-group counts via local metadata), not from
-    df.rdd — the RDD conversion materializes a Python-RDD plan on the
-    driver per call (VERDICT r03 nit). Mirrors Spark's FilePartition
-    sizing: maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    totalBytes / defaultParallelism)); a parquet file additionally cannot
-    split below a row group. Returns None when the files are not local /
-    stat-able (a real cluster against an object store) — callers treat
-    that as 'plenty of splits', making the helper a guaranteed no-op at
-    production scale."""
-    import os
-    from urllib.parse import urlparse
-
-    files = df.inputFiles()
-    if not files:
-        return None
-    sizes, row_groups = [], 0
-    try:
-        import pyarrow.parquet as pq
-
-        for uri in files:
-            u = urlparse(uri)
-            if u.scheme not in ("file", ""):
-                return None
-            path = u.path
-            sizes.append(os.stat(path).st_size)
-            row_groups += pq.ParquetFile(path).metadata.num_row_groups
-    except Exception:
-        # advisory-only helper: a corrupt footer (pyarrow ArrowInvalid),
-        # permission error, or anything else degrades to "plenty of
-        # splits" rather than crashing the query (ADVICE r04)
-        return None
-    def _bytes_conf(key: str, default: int) -> int:
-        # conf values arrive as "134217728b", "128m", "2m", "1g", ...
-        v = str(spark.conf.get(key, str(default))).strip().lower().removesuffix("b")
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}.get(v[-1:], 1)
-        try:
-            return int(float(v[:-1]) * mult) if mult != 1 else int(v)
-        except ValueError:
-            return default
-
-    max_part = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 << 20)
-    open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 << 20)
-    total = sum(sizes)
-    p = spark.sparkContext.defaultParallelism
-    max_split = min(max_part, max(open_cost, total // max(p, 1) + 1))
-    byte_splits = sum(-(-s // max_split) for s in sizes)
-    return min(byte_splits, row_groups)
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Rebalance a scan BEFORE a compute-heavy Arrow-UDF stage when the
-    source has fewer splits than cores. The sf fixtures are single-row-
-    group parquet files — Spark cannot split below a row group, so a
-    heavy UDF over them runs as ONE task on one core (measured: the whole
-    r02 'langid_score regression' was this single task landing on cold
-    Python workers, paying the ~0.6 s first-allocation cost of the
-    (B x nfeats) score matrices per run). At 100 TB the scan already has
-    thousands of splits — or lives on an object store, where the split
-    probe returns None — and this is a no-op; the condition, not the
-    shuffle, is the scale story."""
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    if any(
-        node in analyzed
-        for node in ("Repartition", "Join", "Aggregate", "Sort", "Window")
-    ):
-        return df  # not a narrow scan: something already sized/spread it
-    p = spark.sparkContext.defaultParallelism
-    est = _estimate_scan_tasks(spark, df)
-    if est is not None and est < p:
-        df = df.repartition(p)
-    return df
 
 
 # --------------------------------------------------------------- entry

@@ -14,8 +14,14 @@ fixture at matching scale; operator queries run over the driver-provided
 parquet tables. Each timing is the median of RUNS warm runs (first
 iteration warms the JVM + Python UDF workers and is discarded).
 
+Usage: python bench.py [name ...]
+  With names, only those rows are timed (same keys; "value" sums the
+  timed rows, turns_per_sec and transcript_turns are null unless
+  pipeline_full is among them).
+
 Scaling evidence (north_rule N→4N): scripts/scaling_bench.py runs this
-same pipeline at local[8] vs local[32] and writes BENCH/BASELINE.md.
+same pipeline at local[N] vs local[4N] (default N=4: local[4] vs
+local[16]) and appends to BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -124,20 +130,36 @@ def _sf_from_dir(sf_dir: str) -> float:
         return 0.1
 
 
+def _needles(sf_dir: str) -> list[str]:
+    """10k-needle decontamination list, built deterministically from the
+    corpus itself (substrings => guaranteed hits) + absent canaries;
+    built OUTSIDE the timed region — a real list is a static artifact."""
+    import numpy as np
+    import pandas as pd
+
+    docs_pdf = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["text"])
+    rng = np.random.RandomState(42)
+    texts = docs_pdf["text"].fillna("").tolist()
+    needles = []
+    for _ in range(10_500):
+        t = texts[rng.randint(len(texts))]
+        ln = rng.randint(30, 80)
+        s = rng.randint(max(1, len(t) - ln))
+        needles.append(t[s : s + ln])
+    needles = list(dict.fromkeys(needles))[:10_000]
+    return needles + [f"zzz-canary-{i:05d}" for i in range(50)]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = _sf_from_dir(sf_dir)
 
-    from pyspark.sql import functions as F
-
     from langid_py_spark.fixtures.transcripts import ensure_transcripts
+    from langid_py_spark.operators.contamination import contamination_scan_join
+    from langid_py_spark.spark.partitioning import spread
     from langid_py_spark.spark.pipeline import run_pipeline
     from langid_py_spark.spark.session import get_spark
-
-    spark = get_spark(cores=cpus, shuffle_partitions=cpus, app_name="bench")
-    transcripts = ensure_transcripts(spark, sf)
-    n_turns = spark.read.parquet(transcripts).count()
 
     import __spark_entry__ as entry_mod
 
@@ -147,30 +169,12 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     out_dir = str(REPO / ".cache" / "bench_out")
+    transcripts = None
+    needles: list[str] = []
 
     def bench_pipeline() -> None:
         shutil.rmtree(out_dir, ignore_errors=True)
         run_pipeline(spark, transcripts, out_dir, resume=False)
-
-    # 10k-needle decontamination list, built deterministically from the
-    # corpus itself (substrings => guaranteed hits) + absent canaries;
-    # built OUTSIDE the timed region — a real list is a static artifact
-    import numpy as np
-    import pandas as pd
-
-    from langid_py_spark.operators.contamination import contamination_scan_join
-
-    _docs_pdf = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["text"])
-    _rng = np.random.RandomState(42)
-    _texts = _docs_pdf["text"].fillna("").tolist()
-    _needles = []
-    for _ in range(10_500):
-        t = _texts[_rng.randint(len(_texts))]
-        ln = _rng.randint(30, 80)
-        s = _rng.randint(max(1, len(t) - ln))
-        _needles.append(t[s : s + ln])
-    _needles = list(dict.fromkeys(_needles))[:10_000]
-    _needles += [f"zzz-canary-{i:05d}" for i in range(50)]
 
     operator_benches = {
         "pipeline_full": bench_pipeline,
@@ -187,10 +191,8 @@ def main() -> None:
         "top_customers": lambda: run_noop(qs["top_customers"](spark, sf_dir)),
         "contamination_10k": lambda: run_noop(
             contamination_scan_join(
-                entry_mod._spread(
-                    spark, spark.read.parquet(f"{sf_dir}/documents.parquet")
-                ),
-                _needles,
+                spread(spark, spark.read.parquet(f"{sf_dir}/documents.parquet")),
+                needles,
                 k=16,
             )
         ),
@@ -226,11 +228,24 @@ def main() -> None:
             qs["token_budget_mixture"](spark, sf_dir)
         ),
     }
+    names = sys.argv[1:] or list(operator_benches)
+    unknown = [n for n in names if n not in operator_benches]
+    if unknown:
+        sys.exit(f"unknown bench rows {unknown}; choose from {list(operator_benches)}")
+
+    spark = get_spark(cores=cpus, shuffle_partitions=cpus, app_name="bench")
+    n_turns = None
+    if "pipeline_full" in names:
+        transcripts = ensure_transcripts(spark, sf)
+        n_turns = spark.read.parquet(transcripts).count()
+    if "contamination_10k" in names:
+        needles = _needles(sf_dir)
 
     calib_pre = _calibrate()
     jif0, steal0 = _cpu_jiffies()
     timings: dict[str, float] = {}
-    for name, fn in operator_benches.items():
+    for name in names:
+        fn = operator_benches[name]
         fn()  # warm (JVM codegen + python workers + page cache)
         samples = []
         for _ in range(RUNS):
@@ -255,7 +270,9 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         "transcript_turns": n_turns,
-        "turns_per_sec": round(n_turns / timings["pipeline_full"], 1),
+        "turns_per_sec": (
+            round(n_turns / timings["pipeline_full"], 1) if n_turns else None
+        ),
         "host_cpu_steal_pct": steal_pct,
         # clean-window reference values: see BENCH/BASELINE.md (round-6
         # calibration note). Lines with calib well below those were

@@ -38,6 +38,8 @@ per doc).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,6 +47,84 @@ from langid_py_spark import config as C
 from langid_py_spark.operators import contamination, dedup, packing, spandedup
 from langid_py_spark.operators import quality_classifier as qclf
 from langid_py_spark.spark import rules as rules_mod
+
+Tier = tuple[str, Callable[[DataFrame], DataFrame]]
+
+
+def _tiers(
+    needles: list[str], k_span: int, budget: int, salt: str, floor: float, id_col: str
+) -> list[Tier]:
+    """The seven-tier chain, in order: (table name, tier body). Every
+    body maps the previous tier's (doc_id, text) frame to its own output;
+    t6 adds accept_p and t7 is the packed result. Bodies are only called
+    when their tier is built, so a skipped (resumed) tier never runs its
+    plan-time jobs (the line/span guards' pre-counts)."""
+
+    def spancut(d: DataFrame) -> DataFrame:
+        spans = spandedup.substring_dup_spans(d, k=k_span, id_col=id_col)
+        return spandedup.cut_spans(d, spans, "text", id_col)
+
+    def decontam(d: DataFrame) -> DataFrame:
+        hits = (
+            contamination.contamination_scan_join(d, needles, id_col=id_col)
+            .select(id_col)
+            .distinct()
+        )
+        # broadcast the hit list (r07): contaminated-doc ids are few by
+        # construction (decontam drop rate), and a shuffled anti-join here
+        # re-partitions the WHOLE corpus by id — worse, AQE coalesces that
+        # small-looking shuffle to ~1 partition, serializing the rules +
+        # classifier regex tiers downstream (measured sf1: the t4-6 block
+        # went 5.0 s -> see OPTIMIZATION_r07.md). The broadcast keeps the
+        # input's partitioning flowing straight through t5/t6 — the
+        # "corpus never shuffles for decontamination" story now holds for
+        # the anti-join too, matching contamination_scan_join itself.
+        return d.join(F.broadcast(hits), id_col, "left_anti")
+
+    def keep_rules(d: DataFrame) -> DataFrame:
+        return rules_mod.with_rules(d, "text").filter("keep_heuristic").select(
+            id_col, "text"
+        )
+
+    def clf_sample(d: DataFrame) -> DataFrame:
+        return qclf.classifier_importance_sample(
+            d, id_col=id_col, salt=salt, floor=floor
+        )
+
+    def pack(d: DataFrame) -> DataFrame:
+        packed = packing.pack_sequences(
+            d, budget=budget, text_col="text", id_col=id_col, salt=salt
+        )
+        meta = d.select(
+            F.col(id_col),
+            F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("text_md5"),
+            "accept_p",
+        )
+        return packed.join(meta, id_col).select(
+            id_col, "text_md5", "accept_p", "n_tokens", "start_offset", "bin_id"
+        )
+
+    return [
+        ("t1_exact", lambda d: dedup.exact_dedup_keep(d, "text", id_col)),
+        ("t2_linededup", lambda d: dedup.line_dedup_keep(d, "text", id_col)),
+        ("t3_spancut", spancut),
+        ("t4_decontam", decontam),
+        ("t5_rules", keep_rules),
+        ("t6_clfsample", clf_sample),
+        ("t7_pack", pack),
+    ]
+
+
+_TIER_NAMES = [name for name, _ in _tiers([], 30, 512, "s42", 0.02, "doc_id")]
+
+# Tiers whose output the NEXT tier reads twice: line dedup's drops +
+# rebuild (t1), span detect + cut (t2), decontam hits + anti-join (t3),
+# pack + text_md5/accept_p meta (t6). Without a materialization point
+# Catalyst re-expands the ENTIRE upstream lineage per consumer —
+# measured 185 exchanges (~8 copies of the line-dedup window subtree)
+# vs 31 with these persists. Persisting the other tiers as well made
+# the in-session chain 40-70% slower (sf0.1, 4 cores).
+_PERSISTED = {"t1_exact", "t2_linededup", "t3_spancut", "t6_clfsample"}
 
 
 def corpus_pipeline(
@@ -58,71 +138,19 @@ def corpus_pipeline(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, text_md5, accept_p, n_tokens, start_offset, bin_id) —
-    the packed training-ready corpus after all filter tiers. Stage
-    column contract: every intermediate is exactly (doc_id, text)."""
+    the packed training-ready corpus after all filter tiers, built
+    in-session. The re-read tier boundaries (_PERSISTED) are persisted:
+    a real 100 TB run writes a table per tier (run_corpus_pipeline,
+    the bronze/silver/gold layout run_pipeline uses for transcripts);
+    persist is the in-session equivalent, LRU-evicted."""
     from pyspark import StorageLevel
 
-    def _stage(d: DataFrame) -> DataFrame:
-        # Each tier boundary is consumed by more than one downstream
-        # branch (span-detect + cut both read the line-deduped text;
-        # decontam hits + anti-join both read the cut text; packing and
-        # the text_md5/accept_p meta both read the sampled set). Without
-        # a materialization point Catalyst re-expands the ENTIRE
-        # upstream lineage per consumer — measured 185 exchanges (~8
-        # copies of the line-dedup window subtree) vs 31 with stage
-        # persists. A real 100 TB run writes a table per tier (the
-        # bronze/silver/gold layout run_pipeline uses for transcripts);
-        # persist is the in-session equivalent, LRU-evicted.
-        return d.persist(StorageLevel.MEMORY_AND_DISK)
-
-    docs = df.select(F.col(id_col), F.col(text_col).alias("text"))
-    d1 = _stage(dedup.exact_dedup_keep(docs, "text", id_col))
-    d2 = _stage(dedup.line_dedup_keep(d1, "text", id_col))
-    spans = spandedup.substring_dup_spans(d2, k=k_span, id_col=id_col)
-    d3 = _stage(spandedup.cut_spans(d2, spans, "text", id_col))
-    hits = (
-        contamination.contamination_scan_join(d3, needles, id_col=id_col)
-        .select(id_col)
-        .distinct()
-    )
-    # broadcast the hit list (r07): contaminated-doc ids are few by
-    # construction (decontam drop rate), and a shuffled anti-join here
-    # re-partitions the WHOLE corpus by id — worse, AQE coalesces that
-    # small-looking shuffle to ~1 partition, serializing the rules +
-    # classifier regex tiers downstream (measured sf1: the t4-6 block
-    # went 5.0 s -> see OPTIMIZATION_r07.md). The broadcast keeps d3's
-    # cached partitioning flowing straight through t5/t6 — the
-    # "corpus never shuffles for decontamination" story now holds for
-    # the anti-join too, matching contamination_scan_join itself.
-    d4 = d3.join(F.broadcast(hits), id_col, "left_anti")
-    d5 = rules_mod.with_rules(d4, "text").filter("keep_heuristic").select(
-        id_col, "text"
-    )
-    d6 = _stage(
-        qclf.classifier_importance_sample(d5, id_col=id_col, salt=salt, floor=floor)
-    )
-    packed = packing.pack_sequences(
-        d6, budget=budget, text_col="text", id_col=id_col, salt=salt
-    )
-    meta = d6.select(
-        F.col(id_col),
-        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("text_md5"),
-        "accept_p",
-    )
-    return packed.join(meta, id_col).select(
-        id_col, "text_md5", "accept_p", "n_tokens", "start_offset", "bin_id"
-    )
-
-
-_TIER_NAMES = [
-    "t1_exact",
-    "t2_linededup",
-    "t3_spancut",
-    "t4_decontam",
-    "t5_rules",
-    "t6_clfsample",
-    "t7_pack",
-]
+    d = df.select(F.col(id_col), F.col(text_col).alias("text"))
+    for name, body in _tiers(needles, k_span, budget, salt, floor, id_col):
+        d = body(d)
+        if name in _PERSISTED:
+            d = d.persist(StorageLevel.MEMORY_AND_DISK)
+    return d
 
 
 def run_corpus_pipeline(
@@ -195,10 +223,11 @@ def run_corpus_pipeline(
             )
     os.makedirs(out_dir, exist_ok=True)
 
-    def _save(name: str, d: DataFrame) -> DataFrame:
+    d = df.select(F.col(id_col), F.col(text_col).alias("text"))
+    for name, body in _tiers(needles, k_span, budget, salt, floor, id_col):
         path = os.path.join(out_dir, name)
         if name not in manifest["completed_tiers"]:
-            d.write.mode("overwrite").parquet(path)
+            body(d).write.mode("overwrite").parquet(path)
             manifest["completed_tiers"].append(name)
             # atomic manifest update: a crash mid-dump must not leave a
             # truncated file that breaks every future resume (review r06)
@@ -206,67 +235,8 @@ def run_corpus_pipeline(
             with open(tmp, "w") as f:
                 json.dump(manifest, f)
             os.replace(tmp, man_path)
-        return spark.read.parquet(path)
-
-    done = set(manifest["completed_tiers"])
-
-    def _tier(name: str, build, prev: DataFrame | None) -> DataFrame:
-        # completed tiers are read back without constructing their plan
-        # (build is a thunk so guard pre-count jobs etc. don't run)
-        if name in done:
-            return spark.read.parquet(os.path.join(out_dir, name))
-        return _save(name, build(prev))
-
-    docs = df.select(F.col(id_col), F.col(text_col).alias("text"))
-    d1 = _tier("t1_exact", lambda d: dedup.exact_dedup_keep(docs, "text", id_col), None)
-    d2 = _tier("t2_linededup", lambda d: dedup.line_dedup_keep(d, "text", id_col), d1)
-    d3 = _tier(
-        "t3_spancut",
-        lambda d: spandedup.cut_spans(
-            d, spandedup.substring_dup_spans(d, k=k_span, id_col=id_col), "text", id_col
-        ),
-        d2,
-    )
-
-    def _decontam(d: DataFrame) -> DataFrame:
-        hits = (
-            contamination.contamination_scan_join(d, needles, id_col=id_col)
-            .select(id_col)
-            .distinct()
-        )
-        # broadcast anti-join — same rationale as corpus_pipeline (r07)
-        return d.join(F.broadcast(hits), id_col, "left_anti")
-
-    d4 = _tier("t4_decontam", _decontam, d3)
-    d5 = _tier(
-        "t5_rules",
-        lambda d: rules_mod.with_rules(d, "text")
-        .filter("keep_heuristic")
-        .select(id_col, "text"),
-        d4,
-    )
-    d6 = _tier(
-        "t6_clfsample",
-        lambda d: qclf.classifier_importance_sample(
-            d, id_col=id_col, salt=salt, floor=floor
-        ),
-        d5,
-    )
-
-    def _pack(d: DataFrame) -> DataFrame:
-        packed = packing.pack_sequences(
-            d, budget=budget, text_col="text", id_col=id_col, salt=salt
-        )
-        meta = d.select(
-            F.col(id_col),
-            F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("text_md5"),
-            "accept_p",
-        )
-        return packed.join(meta, id_col).select(
-            id_col, "text_md5", "accept_p", "n_tokens", "start_offset", "bin_id"
-        )
-
-    return _tier("t7_pack", _pack, d6)
+        d = spark.read.parquet(path)
+    return d
 
 
 def corpus_pipeline_oracle_sql(

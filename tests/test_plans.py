@@ -167,6 +167,20 @@ def test_spread_rebalances_only_narrow_scans(spark):
     assert entry_mod._spread(spark, wide) is wide
 
 
+def test_spread_reads_plan_nodes_not_column_names(spark, tmp_path):
+    """A column named like a plan node (`Joined`) does not make a
+    single-row-group scan look already spread."""
+    import pandas as pd
+
+    from langid_py_spark.spark.partitioning import spread
+
+    src = str(tmp_path / "one_group.parquet")
+    pd.DataFrame({"doc_id": range(100), "Joined": ["x"] * 100}).to_parquet(src)
+    narrow = spark.read.parquet(src)
+    p = spark.sparkContext.defaultParallelism
+    assert spread(spark, narrow).rdd.getNumPartitions() == p
+
+
 def test_ivf_join_is_broadcast_equi_join(spark):
     """IVF candidates come from an equi-join on cluster_id with the tiny
     probe side broadcast — never a cartesian/nested-loop."""
@@ -376,7 +390,7 @@ def test_line_dedup_and_packing_plans(spark):
     assert "BroadcastExchange" in pk
 
 
-def test_corpus_pipeline_composed_plan(spark):
+def test_corpus_pipeline_composed_plan(spark, monkeypatch):
     """The composed seven-stage corpus pipeline (query 57): bounded
     shuffle budget end-to-end. The plan STRING re-prints nested
     InMemoryRelation subtrees at every reference, so exchanges are
@@ -391,8 +405,21 @@ def test_corpus_pipeline_composed_plan(spark):
 
     import __spark_entry__ as e
 
+    persisted = []
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame
+    persist = frame_cls.persist
+    monkeypatch.setattr(
+        frame_cls,
+        "persist",
+        lambda d, *a: persisted.append(d.columns) or persist(d, *a),
+    )
     df = e.q_corpus_pipeline(spark, "/root/testdata/sf0.001")
     p = _plan(df)
+    # in-session persists: exactly the four tiers the next tier reads
+    # twice (t1, t2, t3, t6); operator-internal persists carry other
+    # columns. Persisting every tier measured 40-70% slower.
+    tiers = [c for c in persisted if set(c) <= {"doc_id", "text", "accept_p"}]
+    assert len(tiers) == 4, persisted
     uniq = {
         m for m in re.findall(r"Exchange hashpartitioning\(([^,)]+#\d+)", p)
     }
