@@ -152,14 +152,15 @@ def _needles(sf_dir: str) -> list[str]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = _sf_from_dir(sf_dir)
 
     from langid_py_spark.fixtures.transcripts import ensure_transcripts
     from langid_py_spark.operators.contamination import contamination_scan_join
     from langid_py_spark.spark.partitioning import spread
     from langid_py_spark.spark.pipeline import run_pipeline
-    from langid_py_spark.spark.session import get_spark
+    from langid_py_spark.spark.session import default_cores, get_spark
+
+    cpus = default_cores()
 
     import __spark_entry__ as entry_mod
 

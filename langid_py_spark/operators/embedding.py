@@ -47,6 +47,7 @@ Scale story:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 from collections.abc import Iterator
@@ -162,12 +163,18 @@ def py_tf_vector(text: str, dim: int = DEFAULT_DIM) -> np.ndarray:
 
 
 # (dim, token) -> bucket memo. md5-bucketing is a pure function, so the
-# cache can only return what _py_bucket would; it persists across Arrow
+# memo can only return what _py_bucket would; it persists across Arrow
 # batches AND across the dfreq/embed passes in one reused Python worker
-# (the module is importable on executors — the scorer's _MODEL_CACHE
-# pattern). Bounded in practice by the corpus vocabulary; a worker
-# restart simply refills it.
-_BUCKET_CACHE: dict[tuple[int, str], int] = {}
+# (module-level, like the scorer's per-executor loader caches). Bounded:
+# a web-scale vocabulary must not grow a worker without limit (2^18
+# entries hold ~50 MB of keys and links); the LRU keeps the hot tokens
+# that recur in every batch.
+_BUCKET_MEMO_ENTRIES = 1 << 18
+
+
+@functools.lru_cache(maxsize=_BUCKET_MEMO_ENTRIES)
+def _memo_bucket(dim: int, tok: str) -> int:
+    return _py_bucket(tok, dim)
 
 
 def _batch_tf_matrix(texts: list, dim: int) -> np.ndarray:
@@ -193,18 +200,8 @@ def _batch_tf_matrix(texts: list, dim: int) -> np.ndarray:
     )
     doc_idx = np.repeat(np.arange(B), lens)
     inv, uniq = pd.factorize(all_toks, sort=False)
-    cache = _BUCKET_CACHE
-
-    def _bucket_of(u: str) -> int:
-        key = (dim, u)
-        b = cache.get(key, -1)
-        if b < 0:
-            b = _py_bucket(u, dim)
-            cache[key] = b
-        return b
-
     buckets_uniq = np.fromiter(
-        (_bucket_of(u) for u in uniq), dtype=np.int64, count=len(uniq)
+        (_memo_bucket(dim, u) for u in uniq), dtype=np.int64, count=len(uniq)
     )
     flat = doc_idx * dim + buckets_uniq[inv]
     return np.bincount(flat, minlength=B * dim).reshape(B, dim)

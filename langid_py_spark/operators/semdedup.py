@@ -265,7 +265,7 @@ def semdedup_drops(
         default shuffle partitioning is already right, so this is a
         no-op there. Grouping keys are unchanged — routing only."""
         spark = df.sparkSession
-        default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_bins = 16 * len(cc)
         if default_parts < n_bins <= 4096:
             df = df.repartition(n_bins, *[F.col(k) for k in keys])

@@ -8,6 +8,8 @@ Python beyond a thin O(batch) loop around pure-NumPy ops.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -21,24 +23,17 @@ from langid_py_spark.core.lm import (
     TrigramLM,
 )
 
-_LM_CACHE: dict[str, TrigramLM] = {}
-_MULTI_LM_CACHE: dict[str, MultiTrigramLM] = {}
 
-
+# per-executor singletons; module-level defs so cloudpickle ships the
+# UDFs that call them by reference
+@functools.cache
 def _get_lm(path: str) -> TrigramLM:
-    lm = _LM_CACHE.get(path)
-    if lm is None:
-        lm = TrigramLM.load(path)
-        _LM_CACHE[path] = lm
-    return lm
+    return TrigramLM.load(path)
 
 
+@functools.cache
 def _get_multi_lm(path: str) -> MultiTrigramLM:
-    lm = _MULTI_LM_CACHE.get(path)
-    if lm is None:
-        lm = MultiTrigramLM.load(path)
-        _MULTI_LM_CACHE[path] = lm
-    return lm
+    return MultiTrigramLM.load(path)
 
 
 def perplexity_udf(lm_path: str = DEFAULT_LM_PATH, max_bytes: int = C.SCORE_MAX_BYTES):

@@ -1,7 +1,7 @@
 """The flagship quality-filter pipeline (BASELINE.json::north_rule).
 
-One job, ONE semantic shuffle (plus an optional output-shaping exchange
-in the write path — `run_pipeline(write_tasks=...)`):
+One job, ONE semantic shuffle (plus an output-shaping exchange in the
+write path — `WRITE_TASKS`):
 
   scan(transcripts)                         # column-pruned parquet/Iceberg
    └─ classify_batch (Arrow UDF)            # shuffle-free map
@@ -14,6 +14,10 @@ in the write path — `run_pipeline(write_tasks=...)`):
    └─ write partitioned by lang_bucket, sortWithinPartitions(conv_id,
       turn_idx), dynamic partition overwrite + completion manifest
       (resumable: completed buckets are never rewritten)
+
+`full_pipeline` and `run_pipeline` share everything after scoring
+(`with_conv_lang`); `run_pipeline` persists the scored, text-dropped
+frame first so the UDFs run once for the vote and the backjoin.
 
 Reference parity: the per-turn (lang, conf) reproduces
 langid/langid.py::classify exactly (scorer.py); everything else is the
@@ -34,6 +38,10 @@ from langid_py_spark.core.model import DEFAULT_MODEL_PATH
 from langid_py_spark.spark.rules import with_rules
 from langid_py_spark.spark.scrub import scrub_expr
 from langid_py_spark.spark.vote import conversation_vote
+
+# output-shaping exchange width in run_pipeline: LANG_BUCKETS x 4
+# conv-subsplits, one file each
+WRITE_TASKS = 4 * C.LANG_BUCKETS
 
 OUTPUT_COLUMNS = [
     "conv_id",
@@ -85,30 +93,27 @@ def score_turns(
     return df
 
 
+def with_conv_lang(scored: DataFrame) -> DataFrame:
+    """Post-score tail: salted vote → backjoin conv_lang → lang_bucket →
+    OUTPUT_COLUMNS projection (unwritten)."""
+    conv = conversation_vote(scored).select("conv_id", "conv_lang")
+    return (
+        scored.join(conv, "conv_id", "left")
+        .withColumn("lang_bucket", F.pmod(F.hash(F.col("lang")), F.lit(C.LANG_BUCKETS)))
+        .select(*OUTPUT_COLUMNS)
+    )
+
+
 def full_pipeline(
     turns: DataFrame,
     model_path: str = DEFAULT_MODEL_PATH,
     langs: list[str] | None = None,
-    persist_scored: bool = False,
 ) -> DataFrame:
     """score → salted vote → backjoin → final projection (unwritten).
 
-    `persist_scored=True` materializes the scored stage once instead of
-    evaluating the UDF subtree twice (vote branch + join branch). At
-    bench/production scale run_pipeline always does this; at 10^12 turns
-    the same role is played by the scored checkpoint parquet (the resume
-    point), so the UDFs still run exactly once per turn.
-    """
-    scored = score_turns(turns, model_path=model_path, langs=langs)
-    if persist_scored:
-        from pyspark import StorageLevel
-
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    conv = conversation_vote(scored).select("conv_id", "conv_lang")
-    joined = scored.join(conv, "conv_id", "left")
-    return joined.withColumn(
-        "lang_bucket", F.pmod(F.hash(F.col("lang")), F.lit(C.LANG_BUCKETS))
-    ).select(*OUTPUT_COLUMNS)
+    The scored subtree is evaluated by both the vote and the join branch;
+    run_pipeline persists it so the UDFs run once per turn."""
+    return with_conv_lang(score_turns(turns, model_path=model_path, langs=langs))
 
 
 # ------------------------------------------------------------ resumable IO
@@ -133,19 +138,15 @@ def run_pipeline(
     sink_format: str = "parquet",
     sink_options: dict | None = None,
     sink_table: str | None = None,
-    write_tasks: int | None = 4 * C.LANG_BUCKETS,
 ) -> dict:
     """Execute + write, resumable per language bucket.
 
-    `write_tasks` shapes the output: one exchange partitions the final
-    rows by (lang_bucket, pmod(hash(conv_id), write_tasks/LANG_BUCKETS))
-    so the write emits exactly one file per non-empty combination
-    instead of tasks x buckets files. Measured at sf0.1 local[32]: warm
-    write stage 5.4-7.7 s -> 3.2-3.4 s and 182 -> 27 files — the
-    commit overhead of small files costs more than the extra exchange.
-    At cluster scale this is the file-count knob (size it to
-    executors x a few); pass None to skip the exchange entirely (the
-    vote agg remains the only shuffle).
+    The output is shaped by one exchange that partitions the final rows
+    by (lang_bucket, pmod(hash(conv_id), WRITE_TASKS/LANG_BUCKETS)), so
+    the write emits exactly one file per non-empty combination instead
+    of tasks x buckets files. Measured at sf0.1 local[32]: warm write
+    stage 5.4-7.7 s -> 3.2-3.4 s and 182 -> 27 files — the commit
+    overhead of small files costs more than the extra exchange.
 
     On resume, already-completed buckets are excluded from the write
     (their files are never touched — FIXTURES.md invariant 3); dynamic
@@ -165,6 +166,8 @@ def run_pipeline(
       raises. `sink_options` passes through to the writer either way
       (compression, or iceberg table properties).
     """
+    if sink_format == "iceberg" and not sink_table:
+        raise ValueError("sink_format='iceberg' requires sink_table")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # Sink compression default (r07): snappy for the parquet hot path.
     # The session default stays zstd (best size at similar READ speed —
@@ -188,6 +191,7 @@ def run_pipeline(
         return manifest
 
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
     turns = spark.read.parquet(in_path)
     # drop the raw text BEFORE the persist (r07): every downstream
@@ -201,56 +205,20 @@ def run_pipeline(
         .drop("text")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    try:
-        return _run_pipeline_writes(
-            spark, scored, in_path, out_path, manifest, done, todo,
-            sink_format, sink_options, sink_table, write_tasks,
-        )
-    finally:
-        # release the cache entry even on the raising paths (missing
-        # sink_table, absent iceberg catalog) — a long-lived driver must
-        # not accumulate dead cached plans across retries
-        scored.unpersist()
-
-
-def _run_pipeline_writes(
-    spark: SparkSession,
-    scored: DataFrame,
-    in_path: str,
-    out_path: str,
-    manifest: dict,
-    done: set,
-    todo: list,
-    sink_format: str,
-    sink_options: dict | None,
-    sink_table: str | None,
-    write_tasks: int | None,
-) -> dict:
-    conv = conversation_vote(scored).select("conv_id", "conv_lang")
-    result = (
-        scored.join(conv, "conv_id", "left")
-        .withColumn("lang_bucket", F.pmod(F.hash(F.col("lang")), F.lit(C.LANG_BUCKETS)))
-        .select(*OUTPUT_COLUMNS)
-    )
+    result = with_conv_lang(scored)
     if done:
         result = result.filter(F.col("lang_bucket").isin(todo))
 
-    # Output-shaping exchange (see run_pipeline docstring): without it
-    # each of the N upstream tasks emits up to LANG_BUCKETS files and
-    # file-commit overhead dominates; with it the write emits one
-    # conv-sorted file per (bucket, conv-subsplit). The vote agg remains
-    # the job's only SEMANTIC shuffle; this one is IO shaping and is
-    # skippable (write_tasks=None).
-    if write_tasks:
-        sub = max(1, write_tasks // C.LANG_BUCKETS)
-        result = result.repartition(
-            write_tasks,
-            F.col("lang_bucket"),
-            F.pmod(F.hash(F.col("conv_id")), F.lit(sub)),
-        )
-
-    # observe() rides the write job for free (A7 pipeline metrics).
-    from pyspark.sql import Observation
+    # Output-shaping exchange (see docstring): without it each of the N
+    # upstream tasks emits up to LANG_BUCKETS files and file-commit
+    # overhead dominates; with it the write emits one conv-sorted file
+    # per (bucket, conv-subsplit). The vote agg remains the job's only
+    # SEMANTIC shuffle; this one is IO shaping.
+    result = result.repartition(
+        WRITE_TASKS,
+        F.col("lang_bucket"),
+        F.pmod(F.hash(F.col("conv_id")), F.lit(WRITE_TASKS // C.LANG_BUCKETS)),
+    )
 
     # ALL metrics (global + per-bucket lineage) ride the write job as
     # observe() aggregates — no second pass over the scored data. Per
@@ -276,28 +244,32 @@ def _run_pipeline_writes(
             ),
         ]
     to_write = result.observe(obs, *aggs).sortWithinPartitions("conv_id", "turn_idx")
-    if sink_format == "iceberg":
-        if not sink_table:
-            raise ValueError("sink_format='iceberg' requires sink_table")
-        w2 = to_write.writeTo(sink_table).using("iceberg")
-        for k, v in (sink_options or {}).items():
-            w2 = w2.tableProperty(k, str(v))
-        if not spark.catalog.tableExists(sink_table):
-            # bootstrap: first run creates the partitioned table; every
-            # later run (incl. resume) dynamic-overwrites exactly the
-            # lang_buckets present in `result`
-            w2.partitionedBy(F.col("lang_bucket")).create()
+    try:
+        if sink_format == "iceberg":
+            w2 = to_write.writeTo(sink_table).using("iceberg")
+            for k, v in (sink_options or {}).items():
+                w2 = w2.tableProperty(k, str(v))
+            if not spark.catalog.tableExists(sink_table):
+                # bootstrap: first run creates the partitioned table; every
+                # later run (incl. resume) dynamic-overwrites exactly the
+                # lang_buckets present in `result`
+                w2.partitionedBy(F.col("lang_bucket")).create()
+            else:
+                w2.overwritePartitions()
         else:
-            w2.overwritePartitions()
-    else:
-        (
-            to_write.write.mode("overwrite")
-            .partitionBy("lang_bucket")
-            .format(sink_format)
-            .options(**(sink_options or {}))
-            .save(out_path)
-        )
-    observed = dict(obs.get)
+            (
+                to_write.write.mode("overwrite")
+                .partitionBy("lang_bucket")
+                .format(sink_format)
+                .options(**(sink_options or {}))
+                .save(out_path)
+            )
+        observed = dict(obs.get)
+    finally:
+        # release the cache entry even on the raising paths (absent
+        # iceberg catalog) — a long-lived driver must not accumulate dead
+        # cached plans across retries
+        scored.unpersist()
 
     # per-partition lineage/metrics rows from the observed aggregates —
     # only `todo` buckets are updated (done buckets kept from the prior

@@ -15,6 +15,8 @@ no exchange appears in the plan (asserted in tests/test_pipeline.py).
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -22,9 +24,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from langid_py_spark.core.model import DEFAULT_MODEL_PATH, NBModel
-
-# per-executor singleton: {(path, langs): NBModel}
-_MODEL_CACHE: dict[tuple[str, tuple[str, ...] | None], NBModel] = {}
 
 CLASSIFY_SCHEMA = T.StructType(
     [
@@ -36,17 +35,14 @@ CLASSIFY_SCHEMA = T.StructType(
 )
 
 
+@functools.cache
 def _get_model(path: str, langs: tuple[str, ...] | None) -> NBModel:
-    key = (path, langs)
-    m = _MODEL_CACHE.get(key)
-    if m is None:
-        base = _MODEL_CACHE.get((path, None))
-        if base is None:
-            base = NBModel.load(path)
-            _MODEL_CACHE[(path, None)] = base
-        m = base.set_languages(list(langs)) if langs else base
-        _MODEL_CACHE[key] = m
-    return m
+    """Per-executor singleton per (path, langs); a language slice reuses
+    the cached full model. Module-level so cloudpickle ships UDFs that
+    call it by reference."""
+    if langs:
+        return _get_model(path, None).set_languages(list(langs))
+    return NBModel.load(path)
 
 
 def classify_udf(
@@ -87,20 +83,19 @@ def score_udf(
     lm_path: str | None = None,
     langs: list[str] | None = None,
     max_bytes: int | None = 4096,
-    per_lang_ppl: bool = True,
 ):
     """Fused classify + perplexity UDF: the hot pipeline ships the text
     column across the Arrow boundary ONCE and returns one struct.
     Separate classify_udf/perplexity_udf remain for standalone use.
 
-    per_lang_ppl=True (default) scores perplexity under the PREDICTED
-    language's LM (CCNet semantics — fusion makes this free: the lang is
-    already in hand when the LM lookup runs; unknown langs fall back to
-    the global LM). False keeps the single global LM."""
-    from langid_py_spark.core.lm import DEFAULT_LM_PATH, DEFAULT_MULTI_LM_PATH
-    from langid_py_spark.spark.perplexity import _get_lm, _get_multi_lm
+    Perplexity is scored under the PREDICTED language's LM (CCNet
+    semantics — fusion makes this free: the lang is already in hand when
+    the LM lookup runs; unknown langs fall back to the artifact's global
+    LM). `lm_path` is a per-language artifact (MultiTrigramLM)."""
+    from langid_py_spark.core.lm import DEFAULT_MULTI_LM_PATH
+    from langid_py_spark.spark.perplexity import _get_multi_lm
 
-    lm_path_r = lm_path or (DEFAULT_MULTI_LM_PATH if per_lang_ppl else DEFAULT_LM_PATH)
+    lm_path_r = lm_path or DEFAULT_MULTI_LM_PATH
     langs_t = tuple(langs) if langs else None
 
     @pandas_udf(SCORE_SCHEMA)
@@ -108,13 +103,9 @@ def score_udf(
         model = _get_model(model_path, langs_t)
         vals = texts.fillna("").tolist()
         lang, raw, norm, nbytes = model.classify_batch(vals, max_bytes=max_bytes)
-        if per_lang_ppl:
-            mlm = _get_multi_lm(lm_path_r)
-            ppl = mlm.perplexity_batch_by_lang(
-                vals, list(lang), max_bytes=max_bytes or 4096
-            )
-        else:
-            ppl = _get_lm(lm_path_r).perplexity_batch(vals, max_bytes=max_bytes or 4096)
+        ppl = _get_multi_lm(lm_path_r).perplexity_batch_by_lang(
+            vals, list(lang), max_bytes=max_bytes or 4096
+        )
         return pd.DataFrame(
             {
                 "lang": lang,

@@ -3,6 +3,8 @@
 Local-mode defaults follow the sandbox (local[N], single JVM); on a real
 cluster the same builder settings apply — AQE on, Arrow on, UTC, shuffle
 partitions sized to cores (overridden by AQE coalescing at runtime).
+Shuffle/spill files go where Spark puts them: SPARK_LOCAL_DIRS (or
+spark.local.dir via `extra_conf`), else the JVM temp dir.
 """
 
 from __future__ import annotations
@@ -36,31 +38,22 @@ def _ensure_worker_pythonpath() -> None:
         os.environ.setdefault(var, "1")
 
 
-def _default_local_dir() -> str | None:
-    """Directory for Spark's shuffle/spill files (spark.local.dir).
+def default_cores() -> int:
+    """local[N] width: $SPARK_GRAFT_CPUS, else every core of this host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
-    Spark defaults to /tmp, which on this VM is the slow rootfs disk —
-    a measured anti-scaling trap (CLAUDE.md; guide §2.1: local disk
-    bandwidth can be the tighter shuffle limit). Back-to-back sf1 A/B
-    (r07): corpus_pipeline 16.0 -> 14.8 s, substring_dup_spans 4.2 ->
-    3.5 s with shuffle files on the 126 GB tmpfs. Precedence:
 
-    * SPARK_GRAFT_LOCAL_DIR env — the production knob: point it at the
-      fast local-disk array (tmpfs is only right when RAM dwarfs the
-      shuffle volume, which holds in this sandbox but NOT on a 100 TB
-      cluster, where spills must land on real disks);
-    * /dev/shm when present/writable (this sandbox's fast path);
-    * None — keep Spark's default.
-    Spark cleans its local dir on shutdown; a killed JVM can leave
-    files behind, which on tmpfs means RAM until deleted — the
-    standing trade of RAM-disk shuffle dirs.
-    """
-    env = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+def default_driver_memory() -> str:
+    """$SPARK_DRIVER_MEM, else half of physical RAM capped at 16g.
+
+    Local mode runs every task inside the driver JVM, but the Python UDF
+    workers live outside its heap, so the heap must stay well below host
+    RAM (a fixed 16g overcommits a 15 GB host)."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
     if env:
         return env
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        return "/dev/shm/spark-graft-local"
-    return None
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
 
 
 def get_spark(
@@ -70,7 +63,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     _ensure_worker_pythonpath()
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -83,13 +76,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bigger Arrow batches amortize UDF dispatch; scorer is matmul-bound
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    local_dir = _default_local_dir()
-    if local_dir:
-        b = b.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

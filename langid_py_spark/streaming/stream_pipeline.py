@@ -38,11 +38,6 @@ def read_transcript_stream(
     )
 
 
-def scored_stream(stream: DataFrame) -> DataFrame:
-    """Stateless scoring — identical transformation graph to batch."""
-    return score_turns(stream)
-
-
 def windowed_lang_counts(stream: DataFrame, window: str = "10 minutes", watermark: str = "20 minutes") -> DataFrame:
     """Watermarked per-language turn counts (late data beyond the
     watermark is dropped deterministically)."""

@@ -1,6 +1,7 @@
 """THE BASELINE gate (BASELINE.json::metric): keep/drop F1 >= 0.99 and
 byte-exact scrubbed text vs the reference oracle at SF=0.1 under stable
-(conv_id, turn_idx) ordering.
+(conv_id, turn_idx) ordering, over the rows the production path
+(run_pipeline) writes.
 
 The oracle is the single-process NumPy implementation (core/), pinned to
 the published langid.py semantics by the unit/property suite — per
@@ -30,11 +31,13 @@ def sf01(spark) -> str:
     return ensure_transcripts(spark, 0.1)
 
 
-def test_f1_and_scrub_gate_sf01(spark, sf01):
-    from langid_py_spark.spark.pipeline import full_pipeline
+def test_f1_and_scrub_gate_sf01(spark, sf01, tmp_path):
+    from langid_py_spark.spark.pipeline import run_pipeline
 
+    out = str(tmp_path / "gate_out")
+    run_pipeline(spark, sf01, out, resume=False)
     got = (
-        full_pipeline(spark.read.parquet(sf01), persist_scored=True)
+        spark.read.parquet(out)
         .select("conv_id", "turn_idx", "lang", "keep", "scrubbed_text")
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])

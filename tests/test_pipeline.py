@@ -108,6 +108,21 @@ def test_run_twice_identical(spark, fixture_path, tmp_path):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_run_pipeline_rows_equal_full_pipeline(result, spark, fixture_path, tmp_path):
+    """Both callers of the post-score tail (with_conv_lang) produce the
+    same rows: run_pipeline's persisted, text-dropped, written output
+    reads back equal to full_pipeline's unwritten frame."""
+    out = str(tmp_path / "tail")
+    run_pipeline(spark, fixture_path, out)
+    written = (
+        spark.read.parquet(out)
+        .toPandas()
+        .sort_values(["conv_id", "turn_idx"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(written[result.columns], result)
+
+
 def test_resume_skips_completed_buckets(spark, fixture_path, tmp_path):
     out = str(tmp_path / "resume")
     m1 = run_pipeline(spark, fixture_path, out)

@@ -181,6 +181,26 @@ def test_keep_partitions_ids(spark, vec_df):
     assert keepers <= kept_ids
 
 
+def test_group_bins_follow_live_shuffle_partitions(spark, vec_df):
+    """_grouped reads the session's live spark.sql.shuffle.partitions:
+    K=4 clusters get their own 16*K = 64 bins only while the live
+    setting is below that; at 64 the default shuffle is kept."""
+    df, ids, mat = vec_df
+    cents = spherical_kmeans(np.asarray(mat, dtype=np.float64), 4, seed=99)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def plan_at(parts: int) -> str:
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        drops = S.semdedup_drops(df, cents, eps=0.98)
+        return drops._jdf.queryExecution().analyzed().toString()
+
+    try:
+        assert "RepartitionByExpression" in plan_at(8)
+        assert "RepartitionByExpression" not in plan_at(64)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_max_cluster_guard_raises(spark, vec_df):
     df, ids, mat = vec_df
     cents = spherical_kmeans(np.asarray(mat, dtype=np.float64), 1, seed=99)
