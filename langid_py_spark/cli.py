@@ -55,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--k-span", type=int, default=30)
     ap.add_argument("--budget", type=int, default=512)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("paths", nargs="*")
     args = ap.parse_args(argv)
 
@@ -135,11 +135,6 @@ def main(argv: list[str] | None = None) -> int:
     model = NBModel.load()
     if langs:
         model = model.set_languages(langs)
-
-    def emit(name: str, text: str) -> None:
-        ls, raw, norm, _ = model.classify_batch([text])
-        conf = raw[0] if args.no_norm else norm[0]
-        print(f"{name},{ls[0]},{conf:.6f}")
 
     if args.batch:
         for p in args.paths:

@@ -47,6 +47,7 @@ from langid_py_spark import config as C
 from langid_py_spark.operators import contamination, dedup, packing, spandedup
 from langid_py_spark.operators import quality_classifier as qclf
 from langid_py_spark.spark import rules as rules_mod
+from langid_py_spark.spark.manifest import resume_manifest, write_manifest
 
 Tier = tuple[str, Callable[[DataFrame], DataFrame]]
 
@@ -171,11 +172,10 @@ def run_corpus_pipeline(
     bronze/silver/gold layout the in-session persists stand in for.
     This buys three things the persists cannot:
 
-    * per-tier RESUME — a manifest (_manifest.json, same convention as
-      spark/pipeline.py) records completed tiers + a parameter
-      fingerprint; a re-run skips completed tiers entirely (their
-      files are never touched) and recomputes only from the first
-      missing tier;
+    * per-tier RESUME — a manifest (_manifest.json, spark/manifest.py)
+      records completed tiers + a parameter fingerprint; a re-run skips
+      completed tiers entirely (their files are never touched) and
+      recomputes only from the first missing tier;
     * lineage truncation — every tier plan starts from a fresh scan,
       so no nested-InMemoryRelation growth and no recompute-on-evict;
     * inspectable intermediates — each tier's output is a real table
@@ -189,52 +189,19 @@ def run_corpus_pipeline(
     raises with instructions; pass resume=False to rebuild. Returns
     the final packed DataFrame read from t7_pack.
     """
-    import hashlib
-    import json
     import os
 
-    try:
-        input_id: object = sorted(df.inputFiles()) or df.semanticHash()
-    except Exception:  # semanticHash availability is version-dependent
-        input_id = sorted(df.inputFiles())
-    fp = hashlib.md5(
-        json.dumps(
-            [
-                input_id,
-                sorted(needles),
-                k_span,
-                budget,
-                salt,
-                floor,
-                text_col,
-                id_col,
-            ]
-        ).encode()
-    ).hexdigest()
-    man_path = os.path.join(out_dir, "_manifest.json")
-    manifest: dict = {"params_fp": fp, "completed_tiers": []}
-    if resume and os.path.exists(man_path):
-        with open(man_path) as f:
-            manifest = json.load(f)
-        if manifest.get("params_fp") != fp:
-            raise ValueError(
-                f"resume manifest at {out_dir} was written with different "
-                "pipeline parameters or input data; pass resume=False to rebuild"
-            )
-    os.makedirs(out_dir, exist_ok=True)
+    params = [sorted(needles), k_span, budget, salt, floor, text_col, id_col]
+    manifest = resume_manifest(out_dir, df, params, resume)
+    completed = manifest.setdefault("completed_tiers", [])
 
     d = df.select(F.col(id_col), F.col(text_col).alias("text"))
     for name, body in _tiers(needles, k_span, budget, salt, floor, id_col):
         path = os.path.join(out_dir, name)
-        if name not in manifest["completed_tiers"]:
+        if name not in completed:
             body(d).write.mode("overwrite").parquet(path)
-            manifest["completed_tiers"].append(name)
-            # atomic manifest update: a crash mid-dump must not leave a
-            # truncated file that breaks every future resume (review r06)
-            tmp = man_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, man_path)
+            completed.append(name)
+            write_manifest(out_dir, manifest)
         d = spark.read.parquet(path)
     return d
 

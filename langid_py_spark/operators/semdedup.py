@@ -225,16 +225,27 @@ def semdedup_drops(
         ]
     )
 
+    sampled: dict[int, int] | None = None  # salt mode: the pre-count's hot rows
+
     def _one_cluster(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(key[0])
         if len(pdf) > max_cluster:
-            raise ValueError(
-                f"semdedup cluster {cid} has {len(pdf)} rows > max_cluster="
-                f"{max_cluster}: raise n_centroids so clusters stay bounded "
+            hint = (
+                "raise n_centroids so clusters stay bounded "
                 "(SemDeDup scales K with the corpus), use "
                 "on_oversized='salt' for modal data where raising K cannot "
                 "bound the densest cluster, or raise max_cluster explicitly "
                 "if the quadratic per-cluster cost is acceptable"
+                if sampled is None
+                else f"in salt mode the sampled pre-count (1 row in {denom}) "
+                f"counted {sampled.get(cid, f'< {cutoff}')} of its rows, so it "
+                f"was split into {n_sub.get(cid, 1)} group(s); lower "
+                "salt_sample_denom so the sample sees the cluster, or raise "
+                "max_cluster"
+            )
+            raise ValueError(
+                f"semdedup cluster {cid} has {len(pdf)} rows > max_cluster="
+                f"{max_cluster}: {hint}"
             )
         ids = pdf[id_col].to_numpy()
         mat = _to_mat(pdf[vec_col])
@@ -278,15 +289,16 @@ def semdedup_drops(
         # covers sampling noise: at n = max_cluster = 65k and denom 16,
         # the relative sd of n̂ is ~2%.
         cutoff = max(1, max_cluster // denom // 2)
-        hot = (
-            _sampled_cluster_counts(assigned, id_col, denom)
+        sampled = {
+            int(r["cluster_id"]): int(r["_hn"])
+            for r in _sampled_cluster_counts(assigned, id_col, denom)
             .filter(F.col("_hn") >= cutoff)
             .collect()
-        )
+        }
         n_sub = {
-            int(r["cluster_id"]): int(-(-(r["_hn"] * denom * 5) // (4 * max_cluster)))
-            for r in hot
-            if r["_hn"] * denom * 5 > 4 * max_cluster
+            cid: -(-(hn * denom * 5) // (4 * max_cluster))
+            for cid, hn in sampled.items()
+            if hn * denom * 5 > 4 * max_cluster
         }
         if not n_sub:
             # common case: nothing oversized — identical single-window

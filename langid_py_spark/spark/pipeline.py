@@ -26,15 +26,17 @@ quality-filter shell the north rule mandates.
 
 from __future__ import annotations
 
-import json
 import os
-from pathlib import Path
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
+from langid_py_spark.core.lm import DEFAULT_MULTI_LM_PATH
 from langid_py_spark.core.model import DEFAULT_MODEL_PATH
+from langid_py_spark.spark.manifest import artifact_id, read_manifest  # noqa: F401
+from langid_py_spark.spark.manifest import resume_manifest, write_manifest
 from langid_py_spark.spark.rules import with_rules
 from langid_py_spark.spark.scrub import scrub_expr
 from langid_py_spark.spark.vote import conversation_vote
@@ -116,18 +118,6 @@ def full_pipeline(
     return with_conv_lang(score_turns(turns, model_path=model_path, langs=langs))
 
 
-# ------------------------------------------------------------ resumable IO
-def _manifest_path(out_path: str) -> Path:
-    return Path(out_path) / "_manifest.json"
-
-
-def read_manifest(out_path: str) -> dict:
-    p = _manifest_path(out_path)
-    if p.exists():
-        return json.loads(p.read_text())
-    return {"completed_buckets": [], "metrics": {}}
-
-
 def run_pipeline(
     spark: SparkSession,
     in_path: str,
@@ -151,15 +141,20 @@ def run_pipeline(
     On resume, already-completed buckets are excluded from the write
     (their files are never touched — FIXTURES.md invariant 3); dynamic
     partition overwrite means a re-run of a failed bucket replaces only
-    that bucket's directory.
+    that bucket's directory; a run with nothing completed (resume=False
+    included) replaces the whole output. The manifest (spark/manifest.py)
+    is fingerprinted by the input files, the model and LM artifacts
+    (abspath, size, mtime_ns), `langs` in order, the sink and
+    LANG_BUCKETS/WRITE_TASKS/SCORE_MAX_BYTES; a resume under any other
+    fingerprint raises — pass resume=False to rebuild.
 
     Sink selection (north_rule: Iceberg tables at production scale):
     * sink_format="parquet" (default) / "orc" / any path-based source —
       DataFrameWriter.format(sink_format).save(out_path).
-    * sink_format="iceberg" — DataFrameWriterV2: first run bootstraps the
-      lang_bucket-partitioned table (writeTo(...).using("iceberg")
-      .partitionedBy(lang_bucket).create()); subsequent runs, including
-      resumes, overwritePartitions() — dynamic overwrite of exactly the
+    * sink_format="iceberg" — DataFrameWriterV2: a fresh build creates
+      or replaces the lang_bucket-partitioned table (writeTo(...)
+      .using("iceberg").partitionedBy(lang_bucket).createOrReplace());
+      a resume overwritePartitions() — dynamic overwrite of exactly the
       buckets present in this run. Requires the iceberg-spark-runtime
       jar + a configured catalog, which this sandbox doesn't ship; the
       branch is unit-tested up to the analysis error the missing catalog
@@ -178,14 +173,12 @@ def run_pipeline(
     # the right call when the output is long-lived and read often.
     if sink_format == "parquet":
         sink_options = {"compression": "snappy", **(sink_options or {})}
-    manifest = read_manifest(out_path) if resume else {"completed_buckets": [], "metrics": {}}
-    if resume and manifest.get("input") not in (None, in_path):
-        raise ValueError(
-            f"resume manifest at {out_path} was written for input "
-            f"{manifest['input']!r}, not {in_path!r}; pass resume=False to "
-            "overwrite"
-        )
-    done = set(manifest["completed_buckets"])
+    turns = spark.read.parquet(in_path)
+    # langs in the given order: it sets the class order and argmax ties
+    shaping = [langs, sink_format, sink_table, C.LANG_BUCKETS, WRITE_TASKS, C.SCORE_MAX_BYTES]
+    models = [artifact_id(p) for p in (model_path, DEFAULT_MULTI_LM_PATH)]
+    manifest = resume_manifest(out_path, turns, [*models, *shaping], resume)
+    done = set(manifest.get("completed_buckets", []))
     todo = [b for b in range(C.LANG_BUCKETS) if b not in done]
     if not todo:
         return manifest
@@ -193,7 +186,6 @@ def run_pipeline(
     from pyspark import StorageLevel
     from pyspark.sql import Observation
 
-    turns = spark.read.parquet(in_path)
     # drop the raw text BEFORE the persist (r07): every downstream
     # consumer (vote, backjoin, write) reads OUTPUT_COLUMNS, which carry
     # scrubbed_text but never the original text — caching it doubled the
@@ -244,18 +236,19 @@ def run_pipeline(
             ),
         ]
     to_write = result.observe(obs, *aggs).sortWithinPartitions("conv_id", "turn_idx")
+    # a resume overwrites only the todo buckets; a fresh build replaces the
+    # whole dir, so no bucket it leaves empty and no old manifest survives
+    if not done and os.path.isdir(out_path):
+        shutil.rmtree(out_path)
     try:
         if sink_format == "iceberg":
             w2 = to_write.writeTo(sink_table).using("iceberg")
             for k, v in (sink_options or {}).items():
                 w2 = w2.tableProperty(k, str(v))
-            if not spark.catalog.tableExists(sink_table):
-                # bootstrap: first run creates the partitioned table; every
-                # later run (incl. resume) dynamic-overwrites exactly the
-                # lang_buckets present in `result`
-                w2.partitionedBy(F.col("lang_bucket")).create()
-            else:
+            if done:
                 w2.overwritePartitions()
+            else:
+                w2.partitionedBy(F.col("lang_bucket")).createOrReplace()
         else:
             (
                 to_write.write.mode("overwrite")
@@ -282,7 +275,7 @@ def run_pipeline(
         }
         for b in todo
     }
-    manifest["metrics"].update(mrows)
+    manifest.setdefault("metrics", {}).update(mrows)
     # the _metrics table mirrors the FULL manifest map (all completed
     # buckets, incl. prior runs) — a tiny driver-built frame, no extra
     # pass over the data
@@ -302,20 +295,10 @@ def run_pipeline(
     # the write job covered every `todo` bucket — a bucket that produced no
     # rows is still complete (nothing to resume)
     manifest["completed_buckets"] = sorted(done | set(todo))
-    manifest["input"] = in_path
     # observe() sums are NULL on an empty relation; per-bucket entries
     # already live in manifest["metrics"], keep only the globals here
     manifest["observed"] = {
         k: int(observed[k] or 0) for k in ("n_turns", "n_kept")
     }
-    _write_manifest(out_path, manifest)
+    write_manifest(out_path, manifest)
     return manifest
-
-
-def _write_manifest(out_path: str, manifest: dict) -> None:
-    """Atomic manifest update: temp file + os.replace so a crash mid-write
-    can never leave truncated JSON that breaks the next resume."""
-    target = _manifest_path(out_path)
-    tmp = target.with_name(target.name + ".tmp")
-    tmp.write_text(json.dumps(manifest, indent=1, sort_keys=True))
-    os.replace(tmp, target)

@@ -77,6 +77,13 @@ def test_stale_parameter_resume_raises(spark, line_docs, tmp_path):
     run_corpus_pipeline(spark, line_docs, out, NEEDLES, k_span=40, floor=0.3)
     with pytest.raises(ValueError, match="different"):
         run_corpus_pipeline(spark, line_docs, out, NEEDLES, k_span=30, floor=0.3)
+    # same parameters, a different input frame
+    other = str(tmp_path / "other_docs")
+    line_docs.limit(50).write.parquet(other)
+    with pytest.raises(ValueError, match="different"):
+        run_corpus_pipeline(
+            spark, spark.read.parquet(other), out, NEEDLES, k_span=40, floor=0.3
+        )
     # resume=False rebuilds instead
     got = run_corpus_pipeline(
         spark, line_docs, out, NEEDLES, k_span=30, floor=0.3, resume=False

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
 from langid_py_spark.core.lm import TrigramLM
-from langid_py_spark.core.model import NBModel
+from langid_py_spark.core.model import DEFAULT_MODEL_PATH, NBModel
 from langid_py_spark.spark.pipeline import full_pipeline, read_manifest, run_pipeline
 from langid_py_spark.spark.rules import python_rule_oracle
 from langid_py_spark.spark.scrub import python_scrub_oracle
@@ -159,6 +159,34 @@ def test_resume_skips_completed_buckets(spark, fixture_path, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(after, full)
+
+
+@pytest.mark.parametrize("change", ["langs", "model", "input_rewritten", "input_path"])
+def test_resume_refuses_other_inputs_or_model(spark, fixture_path, tmp_path, change):
+    """A manifest resumes only the run that wrote it: another langs list,
+    model artifact, rewritten input or input path raises, and
+    resume=False then rebuilds every bucket."""
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    shutil.copytree(fixture_path, src)
+    run_pipeline(spark, src, out)
+    kw = {}
+    if change == "langs":
+        kw["langs"] = ["en", "de"]
+    elif change == "model":
+        kw["model_path"] = shutil.copy(DEFAULT_MODEL_PATH, tmp_path)
+    elif change == "input_rewritten":
+        # same rows, new part files
+        spark.read.parquet(fixture_path).write.mode("overwrite").parquet(src)
+    else:
+        src = shutil.copytree(src, str(tmp_path / "other_in"))
+    with pytest.raises(ValueError, match="resume=False"):
+        run_pipeline(spark, src, out, resume=True, **kw)
+    m = run_pipeline(spark, src, out, resume=False, **kw)
+    assert m["completed_buckets"] == list(range(C.LANG_BUCKETS))
+    written = spark.read.parquet(out)
+    assert m["observed"]["n_turns"] == written.count()
+    if change == "langs":
+        assert {r.lang for r in written.select("lang").distinct().collect()} <= {"en", "de"}
 
 
 def test_output_sorted_within_partitions(spark, fixture_path, tmp_path):

@@ -296,6 +296,21 @@ def test_salt_mode_completes_oversized_bounded_overkeep(spark):
     assert set(got.dup_of) <= kept_ids
 
 
+def test_salt_mode_oversized_message_names_the_sample(spark):
+    """A sample too sparse to see the blob leaves it unsalted; the raise
+    then points at the sample, not at the mode the caller already set."""
+    df, ids, mat, _ = _dense_blob_df(spark)
+    cents = spherical_kmeans(np.asarray(mat, dtype=np.float64), 2, seed=5)
+    drops = S.semdedup_drops(
+        df, cents, eps=0.99, max_cluster=16, on_oversized="salt",
+        salt_sample_denom=2**30,
+    )
+    with pytest.raises(Exception, match="max_cluster") as err:
+        drops.collect()
+    assert "salt_sample_denom" in str(err.value)
+    assert "on_oversized='salt'" not in str(err.value)
+
+
 def test_salt_mode_partitioning_invariant(spark):
     df, ids, mat, _ = _dense_blob_df(spark)
     cents = spherical_kmeans(np.asarray(mat, dtype=np.float64), 2, seed=5)
