@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+_MAX_FIELDS = "spark.sql.debug.maxToStringFields"
+
 
 def artifact_id(path: str) -> list:
     """(abspath, size, mtime_ns) of a model file: a copy elsewhere or a
@@ -28,12 +30,30 @@ def read_manifest(out_dir: str) -> dict:
         return json.load(f)
 
 
+def input_id(df: DataFrame) -> list:
+    """df's identity: the sorted file list of a file-backed frame (else
+    its plan's semantic hash) plus the md5 of its canonicalized analyzed
+    plan, which tells a filter or projection of the same files apart.
+    The canonical text numbers expression ids from 0, so a fresh session
+    reproduces it; semanticHash() of the same read does not. The text is
+    rendered with spark.sql.debug.maxToStringFields lifted for the call:
+    at the session's value a wide node or struct type would print
+    "... N more fields", tying the md5 to a debug setting and hiding
+    differences past the cut."""
+    conf = df.sparkSession.conf
+    was = conf.get(_MAX_FIELDS)
+    conf.set(_MAX_FIELDS, str(2**31 - 1))
+    try:
+        plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
+    finally:
+        conf.set(_MAX_FIELDS, was)
+    return [sorted(df.inputFiles()) or df.semanticHash(), hashlib.md5(plan.encode()).hexdigest()]
+
+
 def resume_manifest(out_dir: str, df: DataFrame, params: list, resume: bool) -> dict:
     """The manifest to continue from (resume) or a fresh one, stamped with
-    the fingerprint of df's input (sorted file list of a file-backed frame,
-    else its plan's semantic hash) and params."""
-    input_id = sorted(df.inputFiles()) or df.semanticHash()
-    fp = hashlib.md5(json.dumps([input_id, *params]).encode()).hexdigest()
+    the fingerprint of df's input_id and params."""
+    fp = hashlib.md5(json.dumps([input_id(df), *params]).encode()).hexdigest()
     manifest = read_manifest(out_dir) if resume else {}
     if manifest and manifest.get("params_fp") != fp:
         raise ValueError(

@@ -1,7 +1,7 @@
 """The flagship quality-filter pipeline (BASELINE.json::north_rule).
 
 One job, ONE semantic shuffle (plus an output-shaping exchange in the
-write path — `WRITE_TASKS`):
+write path, one task per core):
 
   scan(transcripts)                         # column-pruned parquet/Iceberg
    └─ classify_batch (Arrow UDF)            # shuffle-free map
@@ -40,10 +40,6 @@ from langid_py_spark.spark.manifest import resume_manifest, write_manifest
 from langid_py_spark.spark.rules import with_rules
 from langid_py_spark.spark.scrub import scrub_expr
 from langid_py_spark.spark.vote import conversation_vote
-
-# output-shaping exchange width in run_pipeline: LANG_BUCKETS x 4
-# conv-subsplits, one file each
-WRITE_TASKS = 4 * C.LANG_BUCKETS
 
 OUTPUT_COLUMNS = [
     "conv_id",
@@ -132,20 +128,30 @@ def run_pipeline(
     """Execute + write, resumable per language bucket.
 
     The output is shaped by one exchange that partitions the final rows
-    by (lang_bucket, pmod(hash(conv_id), WRITE_TASKS/LANG_BUCKETS)), so
-    the write emits exactly one file per non-empty combination instead
-    of tasks x buckets files. Measured at sf0.1 local[32]: warm write
-    stage 5.4-7.7 s -> 3.2-3.4 s and 182 -> 27 files — the commit
-    overhead of small files costs more than the extra exchange.
+    by (lang_bucket, pmod(hash(conv_id), sub)) into sub x LANG_BUCKETS
+    tasks, so the write emits one conv-sorted file per non-empty
+    combination instead of tasks x buckets files (the commit overhead of
+    small files costs more than the exchange). `sub` =
+    ceil(defaultParallelism / LANG_BUCKETS): at least one task per core
+    and per bucket, 8 on a 4-core host and 32 at local[32] (the fixed
+    width measured there at sf0.1: write stage 5.4-7.7 s -> 3.2-3.4 s,
+    182 -> 27 files). It does not grow with the input: each file holds
+    1/sub of its bucket, so file size grows with the input, and
+    lang_bucket = pmod(hash(lang), 8) is skewed (the sf0.1 buckets hold
+    5.3k-24.7k rows, the largest about twice the mean), so the largest
+    bucket's files are about twice the mean size.
+    The width shapes files, not rows: it is recorded in the manifest as
+    `write_tasks` but is not part of the fingerprint, so a resume on
+    another core count continues.
 
     On resume, already-completed buckets are excluded from the write
     (their files are never touched — FIXTURES.md invariant 3); dynamic
     partition overwrite means a re-run of a failed bucket replaces only
     that bucket's directory; a run with nothing completed (resume=False
     included) replaces the whole output. The manifest (spark/manifest.py)
-    is fingerprinted by the input files, the model and LM artifacts
-    (abspath, size, mtime_ns), `langs` in order, the sink and
-    LANG_BUCKETS/WRITE_TASKS/SCORE_MAX_BYTES; a resume under any other
+    is fingerprinted by the input (its files and canonical plan), the
+    model and LM artifacts (abspath, size, mtime_ns), `langs` in order,
+    the sink and LANG_BUCKETS/SCORE_MAX_BYTES; a resume under any other
     fingerprint raises — pass resume=False to rebuild.
 
     Sink selection (north_rule: Iceberg tables at production scale):
@@ -175,14 +181,17 @@ def run_pipeline(
         sink_options = {"compression": "snappy", **(sink_options or {})}
     turns = spark.read.parquet(in_path)
     # langs in the given order: it sets the class order and argmax ties
-    shaping = [langs, sink_format, sink_table, C.LANG_BUCKETS, WRITE_TASKS, C.SCORE_MAX_BYTES]
+    shaping = [langs, sink_format, sink_table, C.LANG_BUCKETS, C.SCORE_MAX_BYTES]
     models = [artifact_id(p) for p in (model_path, DEFAULT_MULTI_LM_PATH)]
     manifest = resume_manifest(out_path, turns, [*models, *shaping], resume)
     done = set(manifest.get("completed_buckets", []))
     todo = [b for b in range(C.LANG_BUCKETS) if b not in done]
     if not todo:
         return manifest
+    sub = -(-spark.sparkContext.defaultParallelism // C.LANG_BUCKETS)
+    manifest["write_tasks"] = sub * C.LANG_BUCKETS
 
+    import pyarrow as pa
     from pyspark import StorageLevel
     from pyspark.sql import Observation
 
@@ -207,9 +216,9 @@ def run_pipeline(
     # per (bucket, conv-subsplit). The vote agg remains the job's only
     # SEMANTIC shuffle; this one is IO shaping.
     result = result.repartition(
-        WRITE_TASKS,
+        sub * C.LANG_BUCKETS,
         F.col("lang_bucket"),
-        F.pmod(F.hash(F.col("conv_id")), F.lit(WRITE_TASKS // C.LANG_BUCKETS)),
+        F.pmod(F.hash(F.col("conv_id")), F.lit(sub)),
     )
 
     # ALL metrics (global + per-bucket lineage) ride the write job as
@@ -268,22 +277,23 @@ def run_pipeline(
     # only `todo` buckets are updated (done buckets kept from the prior
     # manifest; rewriting them from this run's filtered plan would zero
     # them out)
-    mrows = {
-        str(b): {
-            k: int(observed[f"b{b}_{k}"] or 0)
-            for k in ("n_turns", "n_kept", "n_convs", "total_bytes")
-        }
-        for b in todo
-    }
+    cols = ["n_turns", "n_kept", "n_convs", "total_bytes"]
+    mrows = {str(b): {k: int(observed[f"b{b}_{k}"] or 0) for k in cols} for b in todo}
     manifest.setdefault("metrics", {}).update(mrows)
     # the _metrics table mirrors the FULL manifest map (all completed
     # buckets, incl. prior runs) — a tiny driver-built frame, no extra
-    # pass over the data
+    # pass over the data. An Arrow table becomes a LocalTableScan whatever
+    # spark.sql.execution.arrow.pyspark.enabled says; a list of tuples
+    # (or pandas with that conf off) plans a Scan ExistingRDD run by
+    # Python tasks.
+    ordered = sorted(manifest["metrics"].items(), key=lambda kv: int(kv[0]))
     metrics = spark.createDataFrame(
-        [
-            (int(b), int(m["n_turns"]), int(m["n_kept"]), int(m["n_convs"]), int(m["total_bytes"]))
-            for b, m in sorted(manifest["metrics"].items(), key=lambda kv: int(kv[0]))
-        ],
+        pa.table(
+            {
+                "lang_bucket": [int(b) for b, _ in ordered],
+                **{k: [int(m[k]) for _, m in ordered] for k in cols},
+            }
+        ),
         "lang_bucket int, n_turns long, n_kept long, n_convs long, total_bytes long",
     )
     if sink_format == "iceberg":

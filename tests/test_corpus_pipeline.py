@@ -84,6 +84,11 @@ def test_stale_parameter_resume_raises(spark, line_docs, tmp_path):
         run_corpus_pipeline(
             spark, spark.read.parquet(other), out, NEEDLES, k_span=40, floor=0.3
         )
+    # same parameters and files, a filtered frame: the plan tells it apart
+    with pytest.raises(ValueError, match="different"):
+        run_corpus_pipeline(
+            spark, line_docs.filter("doc_id % 2 = 0"), out, NEEDLES, k_span=40, floor=0.3
+        )
     # resume=False rebuilds instead
     got = run_corpus_pipeline(
         spark, line_docs, out, NEEDLES, k_span=30, floor=0.3, resume=False

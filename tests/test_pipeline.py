@@ -2,6 +2,7 @@
 resume-from-manifest semantics (FIXTURES.md invariants 1-3)."""
 
 import json
+import os
 import shutil
 from pathlib import Path
 
@@ -325,3 +326,135 @@ def test_entry_output_full_twin(result, golden, spark, fixture_path):
     # lang_bucket: pure function of lang, in range
     assert result["lang_bucket"].between(0, C.LANG_BUCKETS - 1).all()
     assert (result.groupby("lang")["lang_bucket"].nunique() == 1).all()
+
+
+def _cores(monkeypatch, spark, n):
+    """Make the session report `n` cores (defaultParallelism), as on a
+    host of that size, for the rest of the test."""
+    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism", property(lambda sc: n))
+
+
+def _bucket_files(out) -> dict:
+    files = {}
+    for f in Path(out).glob("lang_bucket=*/*.parquet"):
+        files.setdefault(int(f.parent.name.split("=")[1]), []).append(f)
+    return files
+
+
+def _sorted_rows(spark, out) -> pd.DataFrame:
+    return (
+        spark.read.parquet(out)
+        .toPandas()
+        .sort_values(["conv_id", "turn_idx"])
+        .reset_index(drop=True)
+    )
+
+
+def test_write_width_is_one_task_per_core(spark, fixture_path, tmp_path, monkeypatch):
+    """At local[8] the width is one task per core (8 = LANG_BUCKETS) and
+    each bucket dir holds one data file. On 32 cores each bucket is split
+    by conv hash into 4 tasks: some bucket gets several files, each
+    sorted by conv, and the rows equal the 8-core run."""
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "wide")
+    m = run_pipeline(spark, fixture_path, ref)
+    assert m["write_tasks"] == C.LANG_BUCKETS
+    assert all(len(fs) == 1 for fs in _bucket_files(ref).values())
+    _cores(monkeypatch, spark, 32)
+    m = run_pipeline(spark, fixture_path, out)
+    assert m["write_tasks"] == 32
+    files = _bucket_files(out)
+    assert max(len(fs) for fs in files.values()) > 1
+    for f in (f for fs in files.values() for f in fs):
+        pdf = pd.read_parquet(f)[["conv_id", "turn_idx"]]
+        assert pdf.equals(pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(_sorted_rows(spark, out), _sorted_rows(spark, ref))
+
+
+def test_resume_under_another_write_width(spark, fixture_path, tmp_path, monkeypatch):
+    """The write width shapes files, not rows, so it is not fingerprinted:
+    a resume on another core count continues, writes the restored
+    buckets at the new width and reads back equal to the clean run."""
+    out = str(tmp_path / "resume_width")
+    m1 = run_pipeline(spark, fixture_path, out)
+    clean = _sorted_rows(spark, out)
+    # the two largest buckets, so the new width splits them
+    big = clean["lang_bucket"].value_counts().index[:2].tolist()
+    manifest = read_manifest(out)
+    manifest["completed_buckets"] = [b for b in manifest["completed_buckets"] if b not in big]
+    (Path(out) / "_manifest.json").write_text(json.dumps(manifest))
+    for b in big:
+        shutil.rmtree(Path(out) / f"lang_bucket={b}")
+    _cores(monkeypatch, spark, 32)
+    m2 = run_pipeline(spark, fixture_path, out, resume=True)
+    assert m2["write_tasks"] > m1["write_tasks"]
+    files = _bucket_files(out)
+    for b in big:
+        assert len(files[b]) > 1, (b, files[b])
+    pd.testing.assert_frame_equal(_sorted_rows(spark, out), clean)
+
+
+def test_metrics_write_is_a_local_scan(spark, fixture_path, tmp_path, monkeypatch):
+    """The 8-row _metrics table is built on the driver: its write plans a
+    LocalTableScan, not a Scan ExistingRDD run by Python tasks, also in
+    a session without Arrow conversion enabled."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans, save = {}, DataFrameWriter.save
+
+    def spy(self, path=None, *a, **kw):
+        plans[path] = self._df._jdf.queryExecution().executedPlan().toString()
+        return save(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "save", spy)
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    was = spark.conf.get(arrow)
+    for enabled in ("true", "false"):
+        out = str(tmp_path / f"metrics_plan_{enabled}")
+        spark.conf.set(arrow, enabled)
+        try:
+            run_pipeline(spark, fixture_path, out)
+        finally:
+            spark.conf.set(arrow, was)
+        plan = plans[os.path.join(out, "_metrics")]
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (enabled, plan)
+
+
+def test_input_id_is_stable_across_sessions(spark, fixture_path):
+    """A fresh process fingerprints the same read equal (so a resume in a
+    new session continues) and another filter of the same files apart.
+    The plan text is untruncated: a session with another
+    spark.sql.debug.maxToStringFields fingerprints a 30-column projection
+    equal, and tells apart two that differ only in the last column."""
+    import subprocess
+    import sys
+
+    from langid_py_spark.spark.manifest import input_id
+
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1])\n"
+        "from langid_py_spark.spark.manifest import input_id\n"
+        "from langid_py_spark.spark.session import get_spark\n"
+        "s = get_spark(cores=1)\n"
+        "s.conf.set('spark.sql.debug.maxToStringFields', '5')\n"
+        "t = s.read.parquet(sys.argv[2])\n"
+        "w = lambda last: t.selectExpr(*[f'turn_idx + {i} AS w{i}' for i in range(29)],"
+        " f'turn_idx + {last} AS w29')\n"
+        "frames = [t.filter('turn_idx % 2 = 0'), t.filter('turn_idx % 2 = 1'), w(29), w(99)]\n"
+        "print(json.dumps([input_id(f) for f in frames]))\n"
+    )
+    root = str(Path(__file__).resolve().parent.parent)
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", code, root, fixture_path],
+        capture_output=True, text=True, timeout=300, env=env, check=True,
+    )
+    even, odd, wide, wide_other = json.loads(proc.stdout.strip().splitlines()[-1])
+    t = spark.read.parquet(fixture_path)
+    here = input_id(t.filter("turn_idx % 2 = 0"))
+    assert even == here
+    assert odd != here
+    max_fields = spark.conf.get("spark.sql.debug.maxToStringFields")
+    cols = [f"turn_idx + {i} AS w{i}" for i in range(30)]
+    assert wide == input_id(t.selectExpr(*cols))
+    assert spark.conf.get("spark.sql.debug.maxToStringFields") == max_fields
+    assert wide_other != wide
