@@ -47,6 +47,7 @@ from langid_py_spark import config as C
 from langid_py_spark.operators import contamination, dedup, packing, spandedup
 from langid_py_spark.operators import quality_classifier as qclf
 from langid_py_spark.spark import rules as rules_mod
+from langid_py_spark.spark.caching import released
 from langid_py_spark.spark.manifest import resume_manifest, write_manifest
 
 Tier = tuple[str, Callable[[DataFrame], DataFrame]]
@@ -178,6 +179,9 @@ def run_corpus_pipeline(
       recomputes only from the first missing tier;
     * lineage truncation — every tier plan starts from a fresh scan,
       so no nested-InMemoryRelation growth and no recompute-on-evict;
+      the frames a tier's operators persist internally (line dedup's
+      lines, pack's bucket base) are released after its write, so a
+      run leaves no cached frame behind;
     * inspectable intermediates — each tier's output is a real table
       (row counts, sampling, debugging between tiers).
 
@@ -199,7 +203,8 @@ def run_corpus_pipeline(
     for name, body in _tiers(needles, k_span, budget, salt, floor, id_col):
         path = os.path.join(out_dir, name)
         if name not in completed:
-            body(d).write.mode("overwrite").parquet(path)
+            with released():  # the tier's operator-internal persists
+                body(d).write.mode("overwrite").parquet(path)
             completed.append(name)
             write_manifest(out_dir, manifest)
         d = spark.read.parquet(path)

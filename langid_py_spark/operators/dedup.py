@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from langid_py_spark import config as C
+from langid_py_spark.spark.caching import persist
 
 # ---------------------------------------------------------------- exact
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -278,13 +279,10 @@ def line_dedup_drops(
         return _window_drops(lines)
     # persist: the guarded plan reads `lines` from several branches
     # (pre-count, hot, tail) — recomputing split+md5 per branch measured
-    # 5x on the bench row. LRU-evicted like the packing persist; at
-    # 10^12 lines checkpoint the line table instead. (r07 re-measured
-    # the persist-only-when-hot alternative on the span tier: LOST —
-    # see substring_dup_spans — so this keeps the same ordering.)
-    from pyspark import StorageLevel
-
-    lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
+    # 5x on the bench row. Released by the caller's caching.released()
+    # scope (run_corpus_pipeline: after the tier's write); at 10^12
+    # lines checkpoint the line table instead.
+    lines = persist(lines)
     hot_list = collect_hot_keys(
         lines, "line_hash", hot_threshold, [id_col, "line_idx"], hot_sample
     )
@@ -720,17 +718,15 @@ def minhash_lsh_pairs(
     `persist_sigs` materializes the signature UDF once instead of once
     per plan branch (at 10^12 docs use a checkpoint table instead).
     The cache entry is keyed by the analyzed plan, so repeated calls on
-    the same input reuse one entry rather than accumulating; it is never
-    explicitly unpersisted (lives until LRU eviction or session end) —
-    pass persist_sigs=False to trade recomputation for zero cache
-    footprint.
+    the same input reuse one entry rather than accumulating; it is
+    released by the caller's caching.released() scope, else lives until
+    LRU eviction or session end — pass persist_sigs=False to trade
+    recomputation for zero cache footprint.
     """
     sig = minhash_signature_udf(n_hashes, shingle_k=shingle_k)
     with_sig = df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
     if persist_sigs:
-        from pyspark import StorageLevel
-
-        with_sig = with_sig.persist(StorageLevel.MEMORY_AND_DISK)
+        with_sig = persist(with_sig)
     band_base = with_sig.repartition(band_tasks) if band_tasks else with_sig
     bands = _band_explode(band_base, "id", n_hashes, n_bands)
     bands = _drop_hot_buckets(bands, ["band", "bhash"], max_bucket)
@@ -797,9 +793,7 @@ def minhash_cross_pairs(
             F.col(fid).alias(out_id), sig(F.col(ftext)).alias("sig")
         )
         if persist_sigs:
-            from pyspark import StorageLevel
-
-            base = base.persist(StorageLevel.MEMORY_AND_DISK)
+            base = persist(base)
         return base, _band_explode(base, out_id, n_hashes, n_bands)
 
     corpus_sigs, corpus_bands = sigs_and_bands(df, id_col, text_col, "id_a")

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
+from langid_py_spark.spark.caching import persist
 
 
 def pack_sequences(
@@ -60,19 +61,19 @@ def pack_sequences(
         else F.regexp_count(t, F.lit(C.WORD_RUN_PATTERN)).cast("long")
     )
     h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
-    from pyspark import StorageLevel
-
-    base = df.select(
-        F.col(id_col),
-        n_tokens.alias("n_tokens"),
-        h.alias("_h"),
-        F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("_bkt"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = persist(
+        df.select(
+            F.col(id_col),
+            n_tokens.alias("n_tokens"),
+            h.alias("_h"),
+            F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("_bkt"),
+        )
+    )
     # persisted because the frame is evaluated TWICE — the bucket-totals
     # collect below and the returned windowed plan; without it the
     # per-row md5 + token count run over the corpus twice (review r05).
-    # Same convention as minhash persist_sigs: lives until LRU eviction
-    # or session end (at 10^12 rows checkpoint to a table instead).
+    # Released by the caller's caching.released() scope, else lives
+    # until LRU eviction (at 10^12 rows checkpoint to a table instead).
     w = Window.partitionBy("_bkt").orderBy(F.asc("_h"), F.asc(id_col))
     in_bucket = base.withColumn(
         "_cum_excl",

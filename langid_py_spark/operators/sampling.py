@@ -281,9 +281,8 @@ def token_budget_sample(
     if any(int(b) < 0 for b in budgets.values()):
         raise ValueError("token_budget_sample: budgets must be >= 0")
 
-    from pyspark import StorageLevel
-
     from langid_py_spark import config as C
+    from langid_py_spark.spark.caching import persist
 
     t = F.coalesce(F.col(text_col), F.lit(""))
     n_tokens = (
@@ -297,7 +296,9 @@ def token_budget_sample(
         sorted((s, int(b)) for s, b in budgets.items()),
         f"{source_col} string, _budget long",
     )
-    base = (
+    # evaluated twice (totals pull + final windowed plan) — the
+    # packing.py persist convention
+    base = persist(
         df.join(F.broadcast(bdf), source_col)  # inner join = the source filter
         .select(
             F.col(id_col),
@@ -307,9 +308,6 @@ def token_budget_sample(
             h.alias("_h"),
             F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("_bkt"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        # evaluated twice (totals pull + final windowed plan) — the
-        # packing.py persist convention
     )
     w = Window.partitionBy(source_col, "_bkt").orderBy(F.asc("_h"), F.asc(id_col))
     in_bucket = base.withColumn(

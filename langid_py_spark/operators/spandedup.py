@@ -17,16 +17,19 @@ offsets. Dropping or cutting the spans is the caller's policy knob
 Two paths, same semantics:
 
 * substring_dup_spans — EXACT: every char position contributes its
-  k-gram. 100% Catalyst (sequence → explode → substring → two window
-  counts → gaps-and-islands merge), zero Python. The corpus-scale
-  shuffle carries (id, pos, xxhash64) — 8-byte gram keys, not k-char
-  strings; the exact-string recount that makes the result collision-
-  proof runs only on the (rare) candidate positions, mirroring the
-  repo's fingerprint→verify discipline. Honest cost: one shuffled row
-  PER CHARACTER POSITION — the same O(total bytes) work as Lee et
-  al.'s suffix array, distributed. Right after doc-level dedup +
-  quality filters have cut the corpus; for raw 100 TB crawl input use
-  the winnowed path.
+  k-gram. 100% Catalyst (UTF-32 encode once per doc → sequence →
+  explode → binary slice → two window counts → gaps-and-islands
+  merge), zero Python. The corpus-scale shuffle carries (id, pos,
+  xxhash64) — 8-byte gram keys, not k-char strings; the exact-string
+  recount that makes the result collision-proof runs only on the
+  (rare) candidate positions, mirroring the repo's fingerprint→verify
+  discipline. Cost: one shuffled row PER CHARACTER POSITION, each
+  hashed in O(k) from the doc's UTF-32 bytes — O(k · total chars), the
+  order of Lee et al.'s suffix array, distributed (a string substring
+  per position would be O(L²) per doc: Spark counts chars from the doc
+  start on every call). Right after doc-level dedup + quality filters
+  have cut the corpus; for raw 100 TB crawl input use the winnowed
+  path.
 * substring_dup_spans_winnowed — SCALE path: only winnowing-selected
   anchor positions (content-defined, Schleimer et al. 2003 — both
   copies of a duplicated substring select the SAME anchors, which
@@ -83,20 +86,24 @@ def substring_dup_spans(
     """(doc_id, span_start, span_end, n_grams): maximal merged char
     spans covered by k-grams occurring >= 2 times in the corpus.
 
-    Plan: scan → sequence/explode to (id, pos) with an 8-byte
-    xxhash64(gram) key → window-count over the hash (ONE corpus-scale
+    Plan: scan → encode each doc once as UTF-32 → sequence/explode to
+    (id, pos) with an 8-byte xxhash64 key over the gram's 4k-byte slice
+    (docs that are not valid UTF-8 hash the encoding of each gram
+    string instead) → window-count over the hash (ONE corpus-scale
     shuffle; the groupBy+join alternative measured 2.40 s vs 1.63 s
     for this at sf0.1/32 cores — the second position-table shuffle
     costs more than the window's sort)
-    → candidates re-join their text BY ID (candidate-scale) → exact
+    → candidates re-join their text BY ID (candidate-scale LEFT join:
+    the text side is the build side; NULL ids dropped first) → exact
     recount over the gram STRING (collision-proof: a 64-bit collision
     only costs a candidate row, the string recount drops it) →
     gaps-and-islands merge per doc. All Catalyst; no UDF anywhere.
 
     Per-row memory note: sequence() materializes one int array per doc
-    (length = chars - k + 1); pipeline docs are length-capped upstream
-    (rules tier), so this is bounded — a 1M-char doc costs an ~8 MB
-    transient array, the practical per-doc ceiling.
+    (length = chars - k + 1) next to its 4-bytes-per-char UTF-32
+    encoding; pipeline docs are length-capped upstream (rules tier), so
+    this is bounded — a 1M-char doc costs ~8 MB of transient arrays,
+    the practical per-doc ceiling.
 
     Hot-gram guard (r06, closing VERDICT r05's one named scale-killer):
     both windows here partition on a gram key, and a SATURATED gram (a
@@ -123,42 +130,64 @@ def substring_dup_spans(
     if k < 2:
         raise ValueError("k must be >= 2")
     t = F.coalesce(F.col(text_col), F.lit(""))
+    docs_txt = df.select(F.col(id_col), t.alias("_t"))
+    gram = F.substring("_t", F.col("pos") + 1, k)
+    # Hash input per position: a 4k-byte slice of the doc's UTF-32
+    # encoding, made once per doc. Spark's string substring counts chars
+    # from the doc start on every call (O(offset)), so hashing
+    # substring(_t, pos+1, k) costs O(L^2) per doc; the binary slice is
+    # O(k). A code point is Spark's char unit, so slice = encoding of the
+    # gram and equal grams get equal ghash. Invalid UTF-8 breaks that:
+    # Spark counts b"\xe2\x82a" as 1 char, Java's decoder as 2, and the
+    # counts can even cancel (b"\xe2\x82a\xe2\x82a\xe2\x82\xf0\x9f\x98\x80"
+    # is 6 chars to both, misaligned), so a doc that is not valid UTF-8
+    # hashes the encoding of each gram string instead. The encoding is
+    # its own select: an expression next to explode() runs per output row.
     pos_hash = (
-        df.select(F.col(id_col), t.alias("_t"))
-        .filter(F.length("_t") >= k)
+        docs_txt.filter(F.length("_t") >= k)
         .select(
             id_col,
-            F.explode(F.sequence(F.lit(0), F.length("_t") - k)).alias("pos"),
             "_t",
+            F.encode("_t", "UTF-32").alias("_b"),
+            F.is_valid_utf8("_t").alias("_ok"),
+        )
+        .select(
+            id_col, "_t", "_b", "_ok",
+            F.explode(F.sequence(F.lit(0), F.length("_t") - k)).alias("pos"),
         )
         .select(
             id_col,
             "pos",
-            F.xxhash64(F.substring("_t", F.col("pos") + 1, k)).alias("ghash"),
+            F.xxhash64(
+                F.when(F.col("_ok"), F.substring("_b", 4 * F.col("pos") + 1, 4 * k))
+                .otherwise(F.encode(gram, "UTF-32"))
+            ).alias("ghash"),
         )
     )
-    docs_txt = df.select(F.col(id_col), t.alias("_t"))
     w_hash = Window.partitionBy("ghash")
     # Verify window partitions by (ghash, gram), NOT gram alone (r07,
     # guide §2.4 "share one exchange"): equal gram strings always have
-    # equal ghash (= xxhash64(gram)), so the counts are IDENTICAL — but
-    # candidates leave the count window hash-partitioned by ghash, and
-    # HashPartitioning(ghash) satisfies the (ghash, gram) clustering
-    # requirement, so Spark inserts only a partition-local sort instead
-    # of re-shuffling every candidate's k-char gram string (the one
-    # candidate-scale exchange this operator had). Requires `cand` to
-    # carry ghash through the broadcast text re-join.
+    # equal ghash, so the counts are IDENTICAL — but candidates leave the
+    # count window hash-partitioned by ghash, and HashPartitioning(ghash)
+    # satisfies the (ghash, gram) clustering requirement, so Spark
+    # inserts only a partition-local sort instead of re-shuffling every
+    # candidate's k-char gram string.
     w_gram = Window.partitionBy("ghash", "gram")
+
+    def _with_gram(cand: DataFrame) -> DataFrame:
+        # LEFT join: only the text side can be built, so the static plan
+        # never broadcasts the candidates (which would cost a (ghash,
+        # gram) exchange). NULL ids never match their text; dropping them
+        # first keeps the inner join's rows.
+        return (
+            cand.filter(F.col(id_col).isNotNull())
+            .join(docs_txt, id_col, "left")
+            .select(id_col, "pos", "ghash", gram.alias("gram"))
+        )
 
     def _verify_window(cand: DataFrame) -> DataFrame:
         return (
-            cand.join(docs_txt, id_col)
-            .select(
-                id_col,
-                "pos",
-                "ghash",
-                F.substring("_t", F.col("pos") + 1, k).alias("gram"),
-            )
+            _with_gram(cand)
             .withColumn("_n", F.count("*").over(w_gram))
             .filter(F.col("_n") >= 2)
             .select(id_col, "pos")
@@ -174,19 +203,13 @@ def substring_dup_spans(
 
     if hot_threshold is None:
         return _unguarded()
-    # persist + driver short-circuit: the guarded plan reads pos_hash
-    # from several branches; with no hot key (the common case) we pay
-    # only the sampled pre-count + one cache pass, then run the plain
-    # single-window plan. LRU-evicted; at 10^12 positions checkpoint
-    # the position table instead. (r07 re-measured the precount-first/
-    # persist-only-when-hot alternative: LOST, 3.95 vs 5.79 s median at
-    # sf1 interleaved — recomputing the explode inside the window job
-    # costs more than the cache round trip, so persist-first stays.)
-    from pyspark import StorageLevel
-
+    # driver short-circuit: with no hot key (the common case) the guard
+    # costs one sampled pre-count, then the plain single-window plan.
+    # pos_hash is NOT persisted: with the O(k) hash, recomputing the
+    # explode per branch is cheaper than the cache round trip (seed-2
+    # corpus_chain t2 table: 3.9 s with the persist, 2.4 s without).
     from langid_py_spark.operators.dedup import collect_hot_keys
 
-    pos_hash = pos_hash.persist(StorageLevel.MEMORY_AND_DISK)
     hot_list = collect_hot_keys(
         pos_hash, "ghash", hot_threshold, [id_col, "pos"], hot_sample
     )
@@ -202,11 +225,7 @@ def substring_dup_spans(
         .filter(F.col("_n") >= 2)
         .select(id_col, "pos", "ghash")
     )
-    hot_grams = (
-        pos_hash.join(hot, "ghash")
-        .join(docs_txt, id_col)
-        .select(id_col, "pos", F.substring("_t", F.col("pos") + 1, k).alias("gram"))
-    )
+    hot_grams = _with_gram(pos_hash.join(hot, "ghash"))
     dup_grams = (
         hot_grams.groupBy("gram")
         .agg(F.count("*").alias("_n"))
@@ -445,11 +464,10 @@ def substring_dup_spans_winnowed(
     # persist: re-running the anchor UDF per guarded branch would be the
     # expensive recompute here; short-circuit keeps the no-hot case one
     # window plan (see substring_dup_spans)
-    from pyspark import StorageLevel
-
     from langid_py_spark.operators.dedup import collect_hot_keys
+    from langid_py_spark.spark.caching import persist
 
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    grams = persist(grams)
     hot_list = collect_hot_keys(
         grams, "gram", hot_threshold, [id_col, "pos"], hot_sample
     )

@@ -44,6 +44,22 @@ def test_materialized_equals_in_session(spark, line_docs, tmp_path):
         assert os.path.exists(os.path.join(out, t, "_SUCCESS")), t
 
 
+def test_run_leaves_no_cached_frame(spark, line_docs, tmp_path):
+    """Each tier's operator-internal persists (line dedup's lines, pack's
+    bucket base) are released after the tier's write: a run adds no
+    cached RDD to the session."""
+
+    def cached():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = cached()
+    out = run_corpus_pipeline(
+        spark, line_docs, str(tmp_path / "cp"), NEEDLES, k_span=40, floor=0.3
+    )
+    assert out.count() > 0
+    assert cached() == before
+
+
 def test_resume_skips_completed_tiers(spark, line_docs, tmp_path):
     import shutil
 

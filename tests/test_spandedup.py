@@ -218,3 +218,49 @@ def test_exact_spans_fixture_nonvacuous(spark):
     assert len(got) > 0
     want = _exact_spans(pdf, 30)
     pd.testing.assert_frame_equal(got.astype("int64"), want.astype("int64"))
+
+
+def _byte_docs(spark, rows):
+    """(doc_id, bytes) rows cast binary -> string, so a doc can hold
+    invalid UTF-8 exactly as a parquet scan would deliver it."""
+    return spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in rows], "doc_id long, b binary"
+    ).selectExpr("doc_id", "cast(b as string) AS text")
+
+
+@pytest.mark.parametrize(
+    "guard",
+    [{"hot_threshold": None}, {}, {"hot_threshold": 2, "hot_sample": 1}],
+    ids=["unguarded", "default", "all-hot"],
+)
+def test_exact_spans_utf32_hash_parity(spark, guard):
+    """The per-position hash slices one UTF-32 encoding per doc; spans
+    must equal the string-hash formulation's on every guard route:
+    NULL ids (their grams count toward the hash window, never toward
+    the verify), a non-ASCII char before the shared span, and invalid
+    UTF-8 (Spark counts b"\\xe2\\x82a" as 1 char, Java's decoder as 2).
+    In the second frame, doc 5's invalid prefix is 6 chars to both
+    Spark and Java, but split differently, so a length check alone
+    passes it; its chars 3..5 are doc 6's first three."""
+    g = b"the same shared span of text twenty+"
+    docs = _byte_docs(
+        spark,
+        [
+            (None, b"aa " + g),
+            (None, b"bb " + g),
+            (1, b"cc " + g + b" tail"),
+            (2, "xéy ".encode() + g),
+            (3, b"x\xe2\x82ayz " + g + b" q"),
+            (4, b"k\xe2\x82ayz " + g + b" r"),
+        ],
+    )
+    got = sorted(tuple(r) for r in substring_dup_spans(docs, k=20, **guard).collect())
+    assert got == [(1, 2, 40, 19), (2, 3, 40, 18), (3, 1, 42, 22), (4, 1, 42, 22)]
+
+    skew = b"\xe2\x82a\xe2\x82a\xe2\x82\xf0\x9f\x98\x80"
+    docs = _byte_docs(
+        spark,
+        [(1, b"cc " + g + b" tail"), (5, skew + b" " + g), (6, b"\x9f\x98\x80 " + g)],
+    )
+    got = sorted(tuple(r) for r in substring_dup_spans(docs, k=20, **guard).collect())
+    assert got == [(1, 2, 39, 18), (5, 3, 43, 21), (6, 0, 40, 21)]
