@@ -209,22 +209,12 @@ def main() -> None:
         "quality_clf": lambda: run_noop(qs["quality_classifier"](spark, sf_dir)),
         "line_dedup": lambda: run_noop(qs["line_dedup_keep"](spark, sf_dir)),
         # r06: the composed seven-stage corpus DAG (dedup -> line dedup
-        # -> span cut -> decontam -> rules -> clf sample -> pack). Each
-        # construction persists fresh stage boundaries; clear the cache
-        # first so repeated timed runs don't accumulate stale entries.
-        "corpus_pipeline": lambda: (
-            spark.catalog.clearCache(),
-            run_noop(qs["corpus_pipeline"](spark, sf_dir)),
-        )[-1],
+        # -> span cut -> decontam -> rules -> clf sample -> pack).
+        "corpus_pipeline": lambda: run_noop(qs["corpus_pipeline"](spark, sf_dir)),
         # r06 late additions: the embedding->semantic-dedup tier (dfreq
         # scan + Arrow embed map + k-means fit + cluster-pruning) and
         # the integer-only mixture builder (window + broadcast joins).
-        # semdedup persists the embedding frame internally — clear the
-        # cache so timed runs measure the full recompute.
-        "semdedup": lambda: (
-            spark.catalog.clearCache(),
-            run_noop(qs["semdedup_drops"](spark, sf_dir)),
-        )[-1],
+        "semdedup": lambda: run_noop(qs["semdedup_drops"](spark, sf_dir)),
         "token_mixture": lambda: run_noop(
             qs["token_budget_mixture"](spark, sf_dir)
         ),
@@ -247,9 +237,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in names:
         fn = operator_benches[name]
+        # Operators that persist internally (line/span dedup, semdedup,
+        # the corpus chain) would otherwise find the frame an earlier run
+        # cached under the same plan: every run starts from an empty
+        # cache, cleared outside the timed region.
+        spark.catalog.clearCache()
         fn()  # warm (JVM codegen + python workers + page cache)
         samples = []
         for _ in range(RUNS):
+            spark.catalog.clearCache()
             t0 = time.time()
             fn()
             samples.append(time.time() - t0)

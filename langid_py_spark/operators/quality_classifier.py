@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
+from langid_py_spark.spark.rules import count_chars
 
 DEFAULT_CLF_PATH = str(
     Path(__file__).resolve().parent.parent / "data" / "quality_clf.json"
@@ -87,9 +88,10 @@ def feature_cols(text: Column) -> dict[str, Column]:
     safe_chars = F.greatest(n_chars, F.lit(1))
     n_words = F.regexp_count(t, F.lit(C.WORD_RUN_PATTERN))
     safe_words = F.greatest(n_words, F.lit(1))
+    # count_chars for the dense letter class only (see its docstring)
     return {
         "len_norm": F.least(n_chars / F.lit(1000.0), F.lit(1.0)),
-        "ascii_alpha_frac": F.regexp_count(t, F.lit("[A-Za-z]")) / safe_chars,
+        "ascii_alpha_frac": count_chars(t, "[^A-Za-z]+") / safe_chars,
         "digit_frac": F.regexp_count(t, F.lit("[0-9]")) / safe_chars,
         "cjk_frac": F.regexp_count(t, F.lit(C.CJK_CHAR_PATTERN)) / safe_chars,
         "word_density": n_words / safe_chars,

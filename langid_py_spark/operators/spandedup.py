@@ -243,9 +243,14 @@ def substring_dup_spans_oracle_sql(
     """DuckDB twin — an entirely independent computation path: exact
     gram STRINGS from position one (no hashes anywhere), the same
     window-count + gaps-and-islands merge in SQL. 1-based substring
-    offsets converted to the operator's 0-based [start, end)."""
+    offsets converted to the operator's 0-based [start, end). Rows with
+    a NULL id are left out, as the operator's verify drops them: they
+    get no span and their grams count for no other document."""
     return f"""
-    WITH base AS (SELECT {id_col}, coalesce(text, '') AS t FROM {table}),
+    WITH base AS (
+        SELECT {id_col}, coalesce(text, '') AS t FROM {table}
+        WHERE {id_col} IS NOT NULL
+    ),
     p0 AS (
         SELECT {id_col}, t,
                unnest(range(1, greatest(length(t) - {k} + 2, 1))) AS i

@@ -18,6 +18,30 @@ from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
 
+# A run of non-letters: the complement of C.ALPHA_PATTERN (Java's \P{L}).
+_NON_ALPHA_RUN = r"\P{L}+"
+# At least MIN_WORDS non-ws runs, matched from the start of the text:
+# anchored, so a failed match costs one linear scan.
+_MIN_WORD_RUNS = (
+    f"^({C.WS_RUN_PATTERN})?"
+    f"({C.WORD_RUN_PATTERN}{C.WS_RUN_PATTERN}){{{C.MIN_WORDS - 1}}}{C.NON_WS_CLASS}"
+)
+
+
+def count_chars(text: Column, other_run: str) -> Column:
+    """Chars of `text` left after deleting every match of `other_run`, a
+    run of the complement of the class to count.
+
+    Same value as regexp_count(text, <class>): both count code points of
+    the decoded string, and the replace result is re-encoded as valid
+    UTF-8, so they agree on invalid input too. regexp_count is rewritten
+    to size(regexp_extract_all(...)), one UTF8String per matched char;
+    this builds one string per row. It pays off for a class most chars
+    fall in: letters over 40k transcript turns, 0.34 s -> 0.15 s. For a
+    sparse class (digits, newlines) it measured 2-25% slower.
+    """
+    return F.length(F.regexp_replace(text, other_run, ""))
+
 
 def n_words_expr(text: Column) -> Column:
     """Non-whitespace runs + CJK chars (each CJK char counts as one word).
@@ -35,7 +59,7 @@ def rule_columns(text: Column) -> dict[str, Column]:
     """name -> boolean Column; True means the rule TRIPS (drop signal)."""
     t = F.coalesce(text, F.lit(""))
     n_chars = F.length(t)
-    n_alpha = F.regexp_count(t, F.lit(C.ALPHA_PATTERN))
+    n_alpha = count_chars(t, _NON_ALPHA_RUN)
     n_digit = F.regexp_count(t, F.lit(C.DIGIT_PATTERN))
     lines = F.split(t, "\n")
     n_lines = F.size(lines)
@@ -43,11 +67,17 @@ def rule_columns(text: Column) -> dict[str, Column]:
     return {
         # rlike short-circuits at the first non-ws; regexp_count scans all
         "r_empty": ~t.rlike(C.NON_WS_CLASS),
-        "r_too_short": n_words_expr(t) < C.MIN_WORDS,
+        # MIN_WORDS non-ws runs already make enough words: the exact
+        # count (which collects every word) runs only on shorter texts
+        "r_too_short": ~t.rlike(_MIN_WORD_RUNS) & (n_words_expr(t) < C.MIN_WORDS),
         "r_too_long": n_chars > C.MAX_CHARS,
         # CJK→space (positive class, fast) then fixed non-ws window
-        # (codegen, no HOF, no negated-unicode class — see config.py)
-        "r_long_word": F.regexp_replace(t, C.CJK_CHAR_PATTERN, " ").rlike(
+        # (codegen, no HOF, no negated-unicode class — see config.py).
+        # The same window on the raw text comes first: turning CJK into
+        # spaces only splits runs, so it is a necessary condition, and
+        # it spares the replace on nearly every row.
+        "r_long_word": t.rlike(C.LONG_WORD_RUN_PATTERN)
+        & F.regexp_replace(t, C.CJK_CHAR_PATTERN, " ").rlike(
             C.LONG_WORD_RUN_PATTERN
         ),
         "r_non_alpha": (n_chars > 0)

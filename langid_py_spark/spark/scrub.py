@@ -9,7 +9,13 @@ oracle are the SAME function — verified on the full fixture in
 tests/test_rules_scrub.py.
 
 Catalyst-native (`regexp_replace`), zero UDFs: the whole chain runs inside
-WholeStageCodegen in one pass per rule over the string.
+WholeStageCodegen. A rule only runs on text that holds its trigger
+character: `email` needs an `@` and the digit rules (ipv4, card, phone,
+ssn) a `[0-9]`; a text without it is returned as is, which is what the
+rule would return. The digit test reads the ORIGINAL text, which is
+exact because `<EMAIL>` adds no digit. One guard for the whole digit
+run, not a CASE WHEN per rule: nested guards grew the generated method
+past HotSpot's 8,000-byte JIT limit (ROADMAP D5).
 """
 
 from __future__ import annotations
@@ -26,12 +32,25 @@ _ALL_RULES: list[tuple[str, str, str]] = list(C.SCRUB_RULES) + [
 ]
 
 
+# The rules that need an ASCII digit; scrub_expr's guards rely on this order.
+_DIGIT_RULES = ("ipv4", "card", "phone", "ssn")
+_BY_NAME = {name: (pat, repl) for name, pat, repl in _ALL_RULES}
+assert list(_BY_NAME) == ["email", *_DIGIT_RULES, "tox"], list(_BY_NAME)
+
+
 def scrub_expr(text: Column) -> Column:
     """text -> scrubbed text (chained regexp_replace, frozen order)."""
-    out = F.coalesce(text, F.lit(""))
-    for _name, pat, repl in _ALL_RULES:
-        out = F.regexp_replace(out, pat, repl)
-    return out
+    t = F.coalesce(text, F.lit(""))
+
+    def apply(out: Column, name: str) -> Column:
+        return F.regexp_replace(out, *_BY_NAME[name])
+
+    out = F.when(F.instr(t, "@") > 0, apply(t, "email")).otherwise(t)
+    digits = out
+    for name in _DIGIT_RULES:
+        digits = apply(digits, name)
+    out = F.when(t.rlike(C.DIGIT_PATTERN), digits).otherwise(out)
+    return apply(out, "tox")
 
 
 def with_scrubbed(df: DataFrame, text_col: str = "text", out_col: str = "scrubbed_text") -> DataFrame:

@@ -108,6 +108,27 @@ def test_rules_scrub_stage_whole_stage_codegen(spark, fixture_path):
     assert "EvalPython" not in plan
 
 
+def test_score_stage_methods_stay_jit_compilable(spark, fixture_path):
+    """HotSpot does not JIT a method above 8,000 bytes of bytecode
+    (DontCompileHugeMethods), so a generated method that big runs
+    interpreted. The rules/scrub guards are grouped to keep every
+    WholeStageCodegen subtree of the score stage below it."""
+    from langid_py_spark.spark.pipeline import score_turns
+    from langid_py_spark.spark.rules import with_rules
+    from langid_py_spark.spark.scrub import scrub_expr
+
+    turns = spark.read.parquet(fixture_path)
+    for name, df in [
+        ("score_turns", score_turns(turns)),
+        ("with_rules", with_rules(turns)),
+        ("scrub_expr", turns.select(scrub_expr(F.col("text")).alias("s"))),
+    ]:
+        seq = df._jdf.queryExecution().debug().codegenToSeq()
+        sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+        assert sizes, name
+        assert max(sizes) < 8000, (name, sizes)
+
+
 def test_cosine_bruteforce_plan_is_single_pass_no_join(spark):
     """The brute-force ANN baseline carries the query matrix in the UDF
     closure: the plan must contain NO join of any kind (the round-1 shape

@@ -8,6 +8,8 @@ import pytest
 
 from langid_py_spark import config as C
 from langid_py_spark.spark.rules import (
+    _NON_ALPHA_RUN,
+    count_chars,
     duckdb_rule_sql,
     python_rule_oracle,
     with_rules,
@@ -42,6 +44,19 @@ ADVERSARIAL = [
     "\x0b \x0b \x0b",
     "one\x0btwo three",
     "q" * 40 + "\x0b" + "q" * 40,  # \x0b must BREAK the long-word run 3-ways
+    # one branch each of scrub_expr's trigger guards and the rules'
+    # letter count / long-word precheck
+    "write a1@b2.co now",  # the only digits sit inside the email
+    "a1@b2.co 1.2.3.4",
+    "mail me @ home or x@y, 5 pm",  # an @ with no valid email
+    "c++ and a+b or +x",  # a + with no digit
+    "𝒜𝒷𝒸 abc",  # supplementary-plane letters
+    "e\u0301te caf\u0065\u0301",  # combining marks are not \p{L}
+    "q" * 40 + "中文" + "q" * 40,  # 82 non-ws chars, split by CJK
+    "q" * 61 + "中" + "q" * 3,  # a single CJK char; a 61-char run remains
+    "two words",  # r_too_short's three-run precheck fails: exact count
+    " \t three short words ",  # leading whitespace before the three runs
+    "中 文",  # two runs, but four words with the CJK chars
 ]
 
 
@@ -122,3 +137,21 @@ def test_rules_and_scrub_are_codegen_only(spark, fixture_path):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert "Exchange" not in plan
+
+
+def test_letter_count_equals_regexp_count(spark):
+    """The rules count letters as length(regexp_replace(t, \\P{L}+, ''));
+    it must equal regexp_count(t, \\p{L}) on every row, NULL and invalid
+    UTF-8 included (both decode the same way)."""
+    from pyspark.sql import functions as F
+
+    rows = [(bytearray(s.encode()),) for s in ADVERSARIAL]
+    rows += [(None,), (bytearray(b"ab\xe2\x82cd \xff\xfe\xc3\xa9x"),)]
+    df = spark.createDataFrame(rows, "b binary").selectExpr("cast(b as string) t")
+    got = df.select(
+        count_chars(F.col("t"), _NON_ALPHA_RUN).alias("new"),
+        F.regexp_count(F.col("t"), F.lit(C.ALPHA_PATTERN)).alias("old"),
+    ).collect()
+    assert len(got) == len(rows)
+    assert [r.new for r in got] == [r.old for r in got]
+    assert got[-2].new is None and got[-1].new > 0

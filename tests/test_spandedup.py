@@ -57,6 +57,23 @@ def _exact_spans(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     )
 
 
+def test_null_ids_match_duckdb(spark):
+    """NULL-id rows get no span, and a gram shared only with a NULL-id
+    row is not a duplicate: the operator's verify drops NULL ids, and the
+    DuckDB twin leaves them out the same way."""
+    g = "the same shared span of text twenty+"
+    h = "another gram seen once more by a null"
+    rows = [
+        (None, "aa " + g), (None, "bb " + g), (1, "cc " + g + " tail"),
+        (2, "xéy " + g), (3, "zz " + h), (None, "yy " + h),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in substring_dup_spans(docs, k=20).collect())
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "Int64"})
+    want = [tuple(int(v) for v in r) for r in _exact_spans(pdf, 20).itertuples(index=False)]
+    assert got == want == [(1, 2, 39, 18), (2, 3, 40, 18)]
+
+
 def test_exact_spans_match_duckdb_and_cover_boilerplate(spark):
     """Spark exact path == DuckDB string-ops oracle on hostile docs, and
     the planted license block is covered by one span in EVERY copy."""
