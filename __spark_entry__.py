@@ -364,9 +364,8 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator — 98.9% train acc, en_stop_rate the dominant signal) over
     PURE Catalyst features: one codegen'd dot product per doc, no UDF,
     no shuffle. Emits the linear score z (bit-reproducible across
-    engines — multiply/add only) and its sign; sigmoid is available via
-    with_quality_probability but is not oracle-compared (libm vs
-    java.lang.Math exp differ in the last ulp)."""
+    engines — multiply/add only) and its sign, not sigmoid(z): libm and
+    java.lang.Math exp differ in the last ulp."""
     from langid_py_spark.operators.quality_classifier import (
         score_quality_classifier,
     )

@@ -48,7 +48,6 @@ WS_RUN_PATTERN = r"[ \t\n\f\r\x0b]+"  # the \s+ replacement, all engines
 # Project into interpreted, GC-bound evaluation that stops scaling past
 # ~8 threads. The explicit five-char negated class keeps the fast path
 # (re-benched r06: rules row unchanged vs \S{61}).
-WORD_BOUNDARY_PATTERN = f"[ \\t\\n\\f\\r\\x0b{CJK_RANGE}]+"  # python/duckdb splits elsewhere
 LONG_WORD_RUN_PATTERN = f"{NON_WS_CLASS}{{{MAX_WORD_LEN + 1}}}"
 ALPHA_PATTERN = r"\p{L}"  # Java + RE2; Python oracle uses str.isalpha()
 DIGIT_PATTERN = "[0-9]"

@@ -300,8 +300,6 @@ class NBModel:
         """Single-doc count vector — mirrors langid.py instance2fv (~L230)."""
         return self.batch_fv([text])[0]
 
-    _MAX_WALK_ROWS = 4096  # bounds the B x maxlen walk matrices (memory)
-
     def batch_fv(
         self, texts: list[str | bytes], max_bytes: int | None = None
     ) -> np.ndarray:

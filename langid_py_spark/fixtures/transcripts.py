@@ -149,13 +149,6 @@ def is_mega(conv_i: int) -> bool:
     return conv_i % int(1 / MEGA_FRACTION) == 7
 
 
-def generate_pandas(sf: float) -> pd.DataFrame:
-    """Single-process generation (small sf / golden-label oracle path)."""
-    n = n_convs_for_sf(sf)
-    parts = [gen_conversation(i, is_mega(i)) for i in range(n)]
-    return pd.concat(parts, ignore_index=True)
-
-
 def transcripts_path(sf: float, cache_root: str | None = None) -> str:
     root = cache_root or os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),

@@ -187,11 +187,11 @@ def run_corpus_pipeline(
 
     The fingerprint guards stale resumes: resuming with different
     needles/k/budget/salt/floor — or against a different INPUT (the
-    input identity is the sorted file list for file-backed frames,
-    else the plan's semantic hash; review r06: a params-only
-    fingerprint would happily resume v2.parquet against v1's tiers) —
-    raises with instructions; pass resume=False to rebuild. Returns
-    the final packed DataFrame read from t7_pack.
+    input identity is the sorted file list plus the canonical plan's
+    md5; review r06: a params-only fingerprint would happily resume
+    v2.parquet against v1's tiers) — raises with instructions, and so
+    does resuming a frame that reads no files; pass resume=False to
+    rebuild. Returns the final packed DataFrame read from t7_pack.
     """
     import os
 

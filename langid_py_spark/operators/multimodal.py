@@ -1,4 +1,6 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing for the `media_features` query: opaque
+binary payloads + typed metadata, synthesized (`synth_media`) and then
+decoded in one Arrow-batched stage (`decode_features`).
 
 The decode stage is REAL for three self-describing formats that need no
 external library (r06, VERDICT r05 item 5): BMP (uncompressed 24-bit
@@ -25,7 +27,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id bigint, mime string, nbytes int, payload binary"
@@ -269,74 +270,3 @@ def decode_features(media: DataFrame) -> DataFrame:
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
-
-def resize_media(media: DataFrame, max_side: int = 16) -> DataFrame:
-    """Real RESIZE stage for the bundled image formats: decode, nearest-
-    neighbor downsample so max(width, height) <= max_side (aspect
-    preserved, never upscales), re-encode in the SAME format. Audio
-    payloads get the analogue (decimation to <= max_side*1024 frames);
-    unknown mimes pass through byte-identical (the honest-stub rule:
-    never fake a resize we didn't perform).
-
-    Nearest-neighbor via integer index maps (np.linspace -> fancy
-    index) — one vectorized gather per image, no interpolation library.
-    Same mapInPandas batch shape as decode_features, so the stage
-    composes: filters on (mime, nbytes) push down before any payload
-    crosses to Python."""
-
-    def _resize_rgb(rgb: np.ndarray) -> np.ndarray:
-        h, w, _ = rgb.shape
-        scale = max(w, h) / float(max_side)
-        if scale <= 1.0:
-            return rgb
-        nw = max(1, int(round(w / scale)))
-        nh = max(1, int(round(h / scale)))
-        xi = np.minimum((np.arange(nw) * (w / nw)).astype(np.int64), w - 1)
-        yi = np.minimum((np.arange(nh) * (h / nh)).astype(np.int64), h - 1)
-        return rgb[yi][:, xi]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, mime, payload in zip(b["media_id"], b["mime"], b["payload"]):
-                p = bytes(payload)
-                if mime == "image/bmp":
-                    _, _, rgb = decode_bmp(p)
-                    out = encode_bmp(_resize_rgb(rgb))
-                elif mime in ("image/x-portable-pixmap", "image/ppm"):
-                    _, _, rgb = decode_ppm(p)
-                    out = encode_ppm(_resize_rgb(rgb))
-                elif mime in ("audio/wav", "audio/x-wav"):
-                    frames, ch, samples = decode_wav(p)
-                    cap = max_side * 1024
-                    if frames > cap:
-                        step = int(np.ceil(frames / cap))
-                        out = encode_wav(samples[::step])
-                    else:
-                        out = p
-                else:
-                    out = p  # unknown mime: pass through untouched
-                rows.append((int(mid), mime, len(out), out))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "mime", "nbytes", "payload"]
-            )
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_n: int = 4) -> DataFrame:
-    """'Frame sampling' analogue on opaque payloads: deterministic byte
-    striding (stub for video frame extraction), JVM-side metadata math +
-    Python only for the slice itself."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, mime, nb, payload in zip(
-                b["media_id"], b["mime"], b["nbytes"], b["payload"]
-            ):
-                p = bytes(payload)
-                rows.append((int(mid), mime, int(nb), p[::every_n]))
-            yield pd.DataFrame(rows, columns=["media_id", "mime", "nbytes", "payload"])
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)

@@ -16,25 +16,17 @@ filters or importance-samples by the score. Here:
   stage as the rules.
 * Weights ship as a committed artifact (data/quality_clf.json),
   trained DETERMINISTICALLY offline by scripts/train_quality_clf.py
-  (fixed-iteration full-batch NumPy gradient descent — bit-reproducible,
-  engine-independent); the label is lang=='en' on the sf0.01 fixture —
-  the fixture's stand-in for "is reference-corpus text".
-* fit_quality_classifier is the DISTRIBUTED trainer for real corpora:
-  per iteration one Catalyst aggregation over a persisted feature
-  DataFrame computes the full-batch gradient (the feature dim is ~10,
-  so the driver pull is 10 floats/iteration — the bounded-dim pattern
-  of the IVF fit); the corpus is scanned once and iterations read the
-  cache. Gradient sums are partition-order float sums — the trained
-  weights are deterministic only up to float association, which is why
-  the COMMITTED artifact comes from the NumPy twin (tests pin the two
-  trainers to agree to ~1e-3 and to identical predictions).
+  (fixed-iteration full-batch NumPy gradient descent, `fit_numpy` —
+  bit-reproducible, engine-independent). The label is reference-like
+  clean prose in all 18 languages (positive) against crawl-like junk
+  (negative), generated by core/corpora.py; it does not lean on the
+  langid model's own signal.
 
 The driver query emits the LINEAR score z (and its sign as the
 predicted label) rather than sigmoid(z): z is multiply/add only, so
 DuckDB reproduces it bit-for-bit; exp() differs between libm and
 java.lang.Math in the last ulp, and monotone sigmoid adds no
-information to a threshold decision anyway. `with_quality_probability`
-adds the sigmoid column for consumers that want calibrated scores.
+information to a threshold decision anyway.
 """
 
 from __future__ import annotations
@@ -208,16 +200,6 @@ def quality_classifier_oracle_sql(
     """
 
 
-def with_quality_probability(
-    df: DataFrame, score_col: str = "clf_score", out_col: str = "clf_prob"
-) -> DataFrame:
-    """sigmoid(score) for calibrated consumers (NOT oracle-compared:
-    exp() differs between libm and java.lang.Math in the last ulp)."""
-    return df.withColumn(
-        out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col(score_col)))
-    )
-
-
 def classifier_importance_sample(
     df: DataFrame,
     clf_path: str = DEFAULT_CLF_PATH,
@@ -341,61 +323,3 @@ def fit_numpy(
     b_raw = b - float((w * mu / sd).sum())
     return b_raw, w_raw
 
-
-def fit_quality_classifier(
-    df: DataFrame,
-    label: Column,
-    text_col: str = "text",
-    lr: float = 0.5,
-    iters: int = 60,
-) -> tuple[float, np.ndarray]:
-    """Distributed full-batch logistic regression over the Catalyst
-    features: the feature projection is computed ONCE and persisted;
-    each iteration is one aggregation job (sum of per-row gradient
-    terms — partial aggregation map-side, ~d+1 doubles through the
-    final combine) with the current weights inlined as literals. The
-    driver holds only the d+1 weight vector. Standardization moments
-    come from one extra aggregation up front."""
-    from pyspark import StorageLevel
-
-    cols = feature_cols(F.col(text_col))
-    feat = df.select(
-        label.cast("double").alias("_y"),
-        *[cols[n].alias(n) for n in FEATURE_NAMES],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    d = len(FEATURE_NAMES)
-    stats = feat.agg(
-        F.count("*").alias("n"),
-        *[F.avg(n).alias(f"mu_{n}") for n in FEATURE_NAMES],
-        *[F.stddev_pop(n).alias(f"sd_{n}") for n in FEATURE_NAMES],
-    ).collect()[0]
-    n = stats["n"]
-    mu = np.array([stats[f"mu_{f}"] for f in FEATURE_NAMES])
-    sd = np.array([stats[f"sd_{f}"] for f in FEATURE_NAMES])
-    sd = np.where(sd < 1e-9, 1.0, sd)
-
-    w = np.zeros(d)
-    b = 0.0
-    for _ in range(iters):
-        z: Column = F.lit(float(b))
-        for j, fname in enumerate(FEATURE_NAMES):
-            z = z + F.lit(float(w[j])) * (
-                (F.col(fname) - F.lit(float(mu[j]))) / F.lit(float(sd[j]))
-            )
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        g = p - F.col("_y")
-        row = feat.agg(
-            F.sum(g).alias("g_b"),
-            *[
-                F.sum(
-                    g * (F.col(fname) - F.lit(float(mu[j]))) / F.lit(float(sd[j]))
-                ).alias(f"g_{j}")
-                for j, fname in enumerate(FEATURE_NAMES)
-            ],
-        ).collect()[0]
-        w -= lr * np.array([row[f"g_{j}"] for j in range(d)]) / n
-        b -= lr * float(row["g_b"]) / n
-    feat.unpersist()
-    w_raw = w / sd
-    b_raw = b - float((w * mu / sd).sum())
-    return b_raw, w_raw

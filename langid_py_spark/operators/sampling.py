@@ -445,7 +445,9 @@ def leakage_safe_split(
     expr = None
     for name in names[:-1]:
         cum += weights[name]
-        th = format(int(cum * (1 << 24)), "06x")
+        # a cumulative weight within 1e-9 of 1 reaches 2^24, which would
+        # format as 7 hex chars and sort below most 6-char prefixes
+        th = format(min(int(cum * (1 << 24)), 0xFFFFFF), "06x")
         branch = F.when(prefix < F.lit(th), F.lit(name))
         expr = branch if expr is None else expr.when(prefix < F.lit(th), F.lit(name))
     expr = expr.otherwise(F.lit(names[-1]))
@@ -467,7 +469,7 @@ def leakage_safe_split_oracle_sql(
     whens = []
     for name in names[:-1]:
         cum += weights[name]
-        th = format(int(cum * (1 << 24)), "06x")
+        th = format(min(int(cum * (1 << 24)), 0xFFFFFF), "06x")
         whens.append(
             f"WHEN substring(md5(CAST({id_col} AS VARCHAR) || '{salt}'), 1, 6)"
             f" < '{th}' THEN '{name}'"

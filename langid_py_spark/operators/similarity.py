@@ -13,9 +13,10 @@ Three paths:
   signature band, so the join is an equi-join on a spread key instead of
   a cross join. Recall vs brute force is property-tested.
 * IVF (inverted-file, coarse spherical k-means quantizer) — the other
-  standard scale path: centroids are trained driver-side on a BOUNDED
-  sample (the classic FAISS recipe — at 100 TB you sample ~1M vectors,
-  still driver-feasible), every vector is assigned to its nearest
+  standard scale path: centroids are trained driver-side on a BOUNDED,
+  deterministic sample (`fit_ivf_centroids`; the classic FAISS recipe —
+  at 100 TB you sample ~1M vectors, still driver-feasible), every
+  vector is assigned to its nearest
   centroid by a vectorized Arrow UDF (one matmul per batch), and a
   query probes its `n_probe` nearest centroids: candidates come from an
   equi-join on cluster_id (bounded-cardinality key; AQE handles the
@@ -486,92 +487,6 @@ def fit_ivf_centroids(
     )
     mat = _to_mat(pdf[vec_col])
     return spherical_kmeans(mat, n_centroids, seed=seed)
-
-
-def _normalized_vectors(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """One-column table of L2-normalized float64 vectors — the loop
-    invariant of the distributed Lloyd's fit, computed (and persisted by
-    the caller) ONCE instead of once per iteration."""
-
-    @pandas_udf(T.ArrayType(T.DoubleType()))
-    def _norm(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        return pd.Series(list(_l2_normalize(_to_mat(vecs))))
-
-    return vectors.select(_norm(F.col(vec_col)).alias("nv"))
-
-
-def _lloyd_stats(nv: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """One Lloyd's-iteration job over a normalized-vector table: assign
-    each vector to its nearest centroid (one GEMM per Arrow batch) and
-    reduce to per-(cluster, dim) component sums/counts via posexplode +
-    partial+final hash agg — after map-side combine the shuffle carries
-    ~partitions x K x dim rows regardless of data size."""
-    cc = np.ascontiguousarray(centroids, dtype=np.float64)
-
-    @pandas_udf(T.LongType())
-    def _assign(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=np.int64)
-        mat = _to_mat(vecs)  # already normalized
-        return pd.Series(np.argmax(rowwise_gemm(mat, cc.T), axis=1).astype(np.int64))
-
-    return (
-        nv.select(_assign(F.col("nv")).alias("cid"), F.posexplode("nv").alias("pos", "x"))
-        .groupBy("cid", "pos")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-    )
-
-
-def fit_ivf_centroids_distributed(
-    vectors: DataFrame,
-    n_centroids: int = 16,
-    n_iter: int = 10,
-    sample_rows: int = 10_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 123,
-) -> np.ndarray:
-    """Spark-native spherical k-means over the FULL dataset — the
-    alternative to the bounded-sample fit (fit_ivf_centroids) when the
-    sample might miss rare clusters.
-
-    The L2-normalized vectors are materialized ONCE and persisted for
-    the whole fit (VERDICT r03: the previous version re-scanned the
-    source and re-ran the normalize UDF every iteration — at 100 TB,
-    n_iter full corpus scans dominate the fit); each Lloyd's iteration
-    then reads the InMemoryTableScan, assigns (one GEMM per Arrow
-    batch), and reduces to a K x dim stats table collected to the
-    driver (tiny), re-meaned and re-normalized there. At a scale where
-    even the normalized copy can't be cached cluster-wide, write it to
-    a temp parquet once and loop over that — same plan shape. Init =
-    the deterministic sample fit, so the distributed refinement starts
-    from the same seeded point.
-
-    Float caveat (why the registered driver query uses the SAMPLE fit):
-    distributed sums add in partition order, so centroids are not
-    bit-reproducible across partitionings — immaterial for an ANN coarse
-    quantizer, fatal for a value-hash oracle.
-    """
-    from pyspark import StorageLevel
-
-    c = fit_ivf_centroids(
-        vectors, n_centroids, sample_rows=sample_rows,
-        id_col=id_col, vec_col=vec_col, seed=seed,
-    )
-    nv = _normalized_vectors(vectors, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        for _ in range(n_iter):
-            stats = _lloyd_stats(nv, c).toPandas()
-            new_c = c.copy()  # empty clusters keep their previous centroid
-            for cid, grp in stats.groupby("cid"):
-                g = grp.sort_values("pos")
-                new_c[int(cid)] = g["s"].to_numpy() / g["n"].to_numpy()
-            c = _l2_normalize(new_c)
-    finally:
-        nv.unpersist()
-    return c
 
 
 def ivf_assign_udf(centroids: np.ndarray):

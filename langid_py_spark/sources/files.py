@@ -2,13 +2,15 @@
 
 S1  whole-file docs    (langid.py CLI batch mode: each file = one doc)
 S2  line docs          (--line mode: each line = one doc)
+S4  URL fetch          (-u URL mode: fetch a page, classify its text)
 S6  corpus-tree scan   (train/index.py CorpusIndexer: corpus/domain/lang/
                         doc — labels inferred from the path)
 
-All Spark-native readers: `spark.read.text` with/without wholetext +
-`input_file_name()` label extraction. No driver-side directory walking —
-file listing and reading are distributed, so a corpus of 10^8 files
-scales with the cluster (the reference walks the tree single-process).
+The file readers (S1/S2/S6) are Spark-native: `spark.read.text`
+with/without wholetext + `input_file_name()` label extraction. No
+driver-side directory walking — file listing and reading are
+distributed, so a corpus of 10^8 files scales with the cluster (the
+reference walks the tree single-process).
 """
 
 from __future__ import annotations
@@ -38,102 +40,6 @@ def read_line_docs(spark: SparkSession, path: str) -> DataFrame:
     )
     w = Window.partitionBy("path").orderBy(F.monotonically_increasing_id())
     return df.withColumn("line_no", F.row_number().over(w) - 1)
-
-
-def read_jsonl_docs(
-    spark: SparkSession,
-    path: str,
-    text_field: str = "text",
-    id_field: str | None = None,
-    id_kind: str = "long",
-    meta_fields: tuple[str, ...] = ("lang", "source"),
-) -> DataFrame:
-    """JSONL corpus reader — the de-facto distribution format of public
-    training corpora (C4, The Pile, RedPajama ship as {"text": ...,
-    "meta": ...} lines). Returns the engine's documents shape
-    (doc_id, text, <meta...>, n_chars) so every registered operator
-    runs on it unchanged.
-
-    Built on the line reader + from_json rather than spark.read.json so
-    every row has a (file, line_no) POSITION, which fixes three review
-    findings at once (r05): the fallback id is xxhash64(file, line_no)
-    — UNIQUE even for byte-identical lines in one file (a text-content
-    hash collides there, and a colliding doc_id makes exact-dedup's
-    anti-join delete both copies); corrupt lines keep that positional
-    id instead of a NULL key; and `_corrupt` is an ordinary computed
-    column, so filtering on it needs no materialization workaround.
-
-    Corrupt lines do NOT kill a 10^12-line ingest: from_json's
-    PERMISSIVE mode leaves the malformed raw line in `_corrupt`, kept
-    in the output so the caller can count/quarantine (a silent drop
-    would skew corpus statistics). `id_field` reads the corpus's own
-    ids; id_kind='long' casts (non-numeric → positional fallback),
-    id_kind='string' hashes the string id — string/UUID ids must never
-    be force-cast by the JSON parser (that quarantines the whole
-    corpus as corrupt). Schema is EXPLICIT: inference would scan the
-    corpus twice and is banned on the ingest path.
-
-    Scale note: line_no comes from the shared read_line_docs window
-    (per-file partition); a single multi-GB file sorts as one
-    partition at ingest — the usual corpus layout (many files) spreads
-    it, and the bronze-table write that follows ingestion rebalances.
-
-    Collision bound (ADVICE r05): the positional fallback id is ONE
-    64-bit hash, so by the birthday bound a 10^12-line ingest expects
-    ~10^24/2^65 ≈ 2.7e4 colliding PAIRS — and a collided doc_id is
-    exactly the failure the docstring above warns about (exact-dedup's
-    anti-join deletes both colliding docs: ~5e4 docs lost per trillion,
-    a 5e-8 loss rate). For corpora at that scale pass `id_field` (the
-    corpus's own unique id, hashed the same way only when id_kind=
-    'string' — same bound — or used directly as a long), or treat the
-    bronze (path, line_no) pair, which this reader keeps 1:1 with
-    doc_id at write time, as the recovery key. The bound is documented
-    rather than widened because every downstream operator keys on a
-    single long doc_id (a deliberate engine-wide contract: fixed 8-byte
-    shuffle keys); a 128-bit id would double every dedup shuffle's key
-    width to close a 5e-8 hole."""
-    from pyspark.sql import types as T
-
-    if id_kind not in ("long", "string"):
-        raise ValueError("id_kind must be 'long' or 'string'")
-    fields = [T.StructField(text_field, T.StringType())]
-    fields += [T.StructField(m, T.StringType()) for m in meta_fields]
-    if id_field:
-        fields.append(T.StructField(id_field, T.StringType()))
-    fields.append(T.StructField("_corrupt", T.StringType()))
-    schema = T.StructType(fields)
-
-    lines = read_line_docs(spark, path)  # (path, line_no, text=raw line)
-    parsed = lines.select(
-        "path",
-        "line_no",
-        F.from_json(
-            F.col("text"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("_j"),
-    )
-    corrupt = F.col("_j._corrupt")
-    pos_id = F.xxhash64("path", "line_no")
-    if id_field:
-        own = F.col(f"_j.{id_field}")
-        doc_id = (
-            # try_cast: ANSI mode makes .cast() THROW on 'uuid-…' ids;
-            # malformed/missing ids fall back to the positional id
-            F.coalesce(own.try_cast("long"), pos_id)
-            if id_kind == "long"
-            else F.when(own.isNotNull(), F.xxhash64(own)).otherwise(pos_id)
-        )
-    else:
-        doc_id = pos_id
-    t = F.coalesce(F.col(f"_j.{text_field}"), F.lit(""))
-    return parsed.select(
-        doc_id.alias("doc_id"),
-        F.col(f"_j.{text_field}").alias("text"),
-        *[F.col(f"_j.{m}").alias(m) for m in meta_fields],
-        F.length(t).cast("long").alias("n_chars"),
-        corrupt.alias("_corrupt"),
-    )
 
 
 def read_corpus_tree(spark: SparkSession, root: str) -> DataFrame:
@@ -179,19 +85,18 @@ def read_url_docs(
     `fetcher(url, attempt) -> (status, bytes)` is pluggable; the
     default is stdlib urllib with `timeout_s`. A fetch that raises is
     retried up to `max_attempts` with linear backoff, then QUARANTINED:
-    the row survives with error set and payload/text/status null — the
-    JSONL corrupt-line convention; a bad URL must never kill a
-    million-URL job. No network exists in this sandbox, so the default
-    fetcher's rows all quarantine (tested exactly so with an instantly
-    refused 127.0.0.1 port); the deterministic fake fetchers in
+    the row survives with error set and payload/text/status null; a bad
+    URL must never kill a million-URL job. The tests point the default
+    fetcher at an instantly refused 127.0.0.1 port, so its rows all
+    quarantine; the deterministic fake fetchers in
     tests/test_sources_modelstring.py exercise the success paths.
 
     `text` is the UTF-8 decode (errors=replace) of the payload — what
     the downstream scorer consumes; binary payloads stay in `payload`
     for the multimodal operators. doc_id = xxhash64(url): byte-equal
-    URLs are true duplicates; the 64-bit birthday bound is the
-    read_jsonl_docs disclosure (~3e4 colliding pairs at 10^12 urls —
-    pass your own key column via a join when that matters).
+    URLs are true duplicates; by the 64-bit birthday bound 10^12 urls
+    expect ~3e4 colliding pairs (10^24/2^65) — pass your own key column
+    via a join when that matters.
     """
     import time
     from typing import Iterator

@@ -1,7 +1,8 @@
 """The `_manifest.json` resume policy of `run_pipeline` (lang buckets) and
 `run_corpus_pipeline` (tiers): `params_fp` hashes the input's identity and
 every output-shaping parameter; a resume under another fingerprint raises,
-as does a manifest with none (it cannot show what produced it)."""
+as does a manifest with none (it cannot show what produced it), and so
+does any resume of a frame that reads no files."""
 
 from __future__ import annotations
 
@@ -31,9 +32,11 @@ def read_manifest(out_dir: str) -> dict:
 
 
 def input_id(df: DataFrame) -> list:
-    """df's identity: the sorted file list of a file-backed frame (else
-    its plan's semantic hash) plus the md5 of its canonicalized analyzed
-    plan, which tells a filter or projection of the same files apart.
+    """df's identity: the sorted list of the files it reads plus the md5
+    of its canonicalized analyzed plan, which tells a filter or
+    projection of the same files apart. A frame that reads no files
+    (createDataFrame) canonicalizes to `LogicalRDD [none#0L, ...]`
+    whatever its rows are, so nothing here identifies it.
     The canonical text numbers expression ids from 0, so a fresh session
     reproduces it; semanticHash() of the same read does not. The text is
     rendered with spark.sql.debug.maxToStringFields lifted for the call:
@@ -47,14 +50,21 @@ def input_id(df: DataFrame) -> list:
         plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
     finally:
         conf.set(_MAX_FIELDS, was)
-    return [sorted(df.inputFiles()) or df.semanticHash(), hashlib.md5(plan.encode()).hexdigest()]
+    return [sorted(df.inputFiles()), hashlib.md5(plan.encode()).hexdigest()]
 
 
 def resume_manifest(out_dir: str, df: DataFrame, params: list, resume: bool) -> dict:
     """The manifest to continue from (resume) or a fresh one, stamped with
     the fingerprint of df's input_id and params."""
-    fp = hashlib.md5(json.dumps([input_id(df), *params]).encode()).hexdigest()
+    ident = input_id(df)
+    fp = hashlib.md5(json.dumps([ident, *params]).encode()).hexdigest()
     manifest = read_manifest(out_dir) if resume else {}
+    if manifest and not ident[0]:
+        raise ValueError(
+            f"cannot resume at {out_dir}: a frame with no input files cannot "
+            "be identified across sessions; pass resume=False or write the "
+            "input to files"
+        )
     if manifest and manifest.get("params_fp") != fp:
         raise ValueError(
             f"resume manifest at {out_dir} was written with different "

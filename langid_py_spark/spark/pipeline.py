@@ -35,8 +35,7 @@ from pyspark.sql import functions as F
 from langid_py_spark import config as C
 from langid_py_spark.core.lm import DEFAULT_MULTI_LM_PATH
 from langid_py_spark.core.model import DEFAULT_MODEL_PATH
-from langid_py_spark.spark.manifest import artifact_id, read_manifest  # noqa: F401
-from langid_py_spark.spark.manifest import resume_manifest, write_manifest
+from langid_py_spark.spark.manifest import artifact_id, resume_manifest, write_manifest
 from langid_py_spark.spark.rules import with_rules
 from langid_py_spark.spark.scrub import scrub_expr
 from langid_py_spark.spark.vote import conversation_vote

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
@@ -51,10 +51,6 @@ def scrub_expr(text: Column) -> Column:
         digits = apply(digits, name)
     out = F.when(t.rlike(C.DIGIT_PATTERN), digits).otherwise(out)
     return apply(out, "tox")
-
-
-def with_scrubbed(df: DataFrame, text_col: str = "text", out_col: str = "scrubbed_text") -> DataFrame:
-    return df.withColumn(out_col, scrub_expr(F.col(text_col)))
 
 
 def duckdb_scrub_sql(text_expr: str = "text") -> str:

@@ -107,163 +107,6 @@ def test_stream_resume_from_checkpoint_no_dup(spark, fixture_path, tmp_path):
     assert spark.read.parquet(out).count() == n1
 
 
-def test_stateful_vote_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState vote: a conversation whose turns arrive in
-    DIFFERENT micro-batches (maxFilesPerTrigger=1, two file drops) must
-    converge to the same winner as the batch vote over all turns."""
-    import pandas as pd
-
-    from langid_py_spark.spark.vote import conversation_vote_unsalted
-    from langid_py_spark.streaming.stream_pipeline import (
-        stateful_conversation_vote,
-    )
-
-    drop1 = pd.DataFrame(
-        {
-            "conv_id": ["c1", "c1", "c2"],
-            "lang": ["en", "de", "fr"],
-            "nbytes": [100, 10, 50],
-        }
-    )
-    # c1 flips to 'de' only once drop2 arrives; c2 ties en==fr -> 'en' (asc)
-    drop2 = pd.DataFrame(
-        {
-            "conv_id": ["c1", "c2"],
-            "lang": ["de", "en"],
-            "nbytes": [200, 50],
-        }
-    )
-    src = tmp_path / "drops"
-    src.mkdir()
-    drop1.to_parquet(src / "a.parquet", index=False)
-    drop2.to_parquet(src / "b.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema("conv_id string, lang string, nbytes long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    # Pre-round-3 this test burned a flat 120 s: with ProcessingTimeTimeout
-    # registered, an availableNow query NEVER terminates — Spark cycles
-    # no-data batches (~0.7 s each) forever to advance the timeout clock
-    # (measured: 230+ batches; processAllAvailable() blocks on the same
-    # cycle, and even full TTL expiry does not end it). So don't wait for
-    # termination at all: poll the memory sink until both data batches
-    # have emitted (c1 must have updated twice), then stop() the query.
-    import time as _time
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    q = None
-    try:
-        q = (
-            stateful_conversation_vote(stream)
-            .writeStream.format("memory")
-            .queryName("sv")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = _time.time() + 90
-        while _time.time() < deadline:
-            c1_updates = spark.table("sv").filter("conv_id = 'c1'").count()
-            if c1_updates >= 2:
-                break
-            _time.sleep(0.5)
-        else:
-            raise AssertionError("second micro-batch never reached the sink")
-    finally:
-        if q is not None:
-            q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    got = spark.table("sv").toPandas()
-    # >1 update per conv proves the state actually spanned micro-batches
-    assert got.groupby("conv_id").size().max() > 1
-    # final state per conv = row with the max total weight (monotone)
-    final = (
-        got.sort_values(["conv_id", "conv_total_weight"])
-        .groupby("conv_id")
-        .tail(1)
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    both = spark.createDataFrame(pd.concat([drop1, drop2]))
-    want = (
-        conversation_vote_unsalted(both)
-        .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        final[["conv_id", "conv_lang", "conv_lang_weight", "conv_total_weight"]],
-        want[["conv_id", "conv_lang", "conv_lang_weight", "conv_total_weight"]],
-        check_dtype=False,
-    )
-
-
-def test_stateful_exact_dedup_across_microbatches(spark, tmp_path):
-    """Streaming exact dedup: each distinct text emitted exactly once;
-    within the first batch that sees a hash the survivor is the MIN
-    doc_id; a duplicate arriving in a LATER micro-batch is suppressed
-    by the state store."""
-    import time as _time
-
-    import pandas as pd
-
-    from langid_py_spark.streaming.stream_pipeline import stateful_exact_dedup
-
-    drop1 = pd.DataFrame(
-        {
-            "doc_id": [5, 3, 10, 7],
-            "text": ["alpha", "alpha", "beta", "gamma"],  # intra-batch dup
-        }
-    )
-    drop2 = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 9],
-            "text": ["alpha", "delta", "beta"],  # cross-batch dups + new
-        }
-    )
-    src = tmp_path / "drops"
-    src.mkdir()
-    drop1.to_parquet(src / "a.parquet", index=False)
-    drop2.to_parquet(src / "b.parquet", index=False)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    q = None
-    try:
-        q = (
-            stateful_exact_dedup(stream)
-            .writeStream.format("memory")
-            .queryName("sdedup")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = _time.time() + 90
-        while _time.time() < deadline:
-            # drain condition: 'delta' (only in drop2) has been emitted
-            if spark.table("sdedup").count() >= 4:
-                break
-            _time.sleep(0.5)
-        rows = {r.doc_id for r in spark.table("sdedup").collect()}
-    finally:
-        if q is not None:
-            q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    # survivors: alpha -> 3 (min of batch1 dups; batch2's id 1 suppressed),
-    # beta -> 10, gamma -> 7, delta -> 2
-    assert rows == {3, 10, 7, 2}
-
-
 def test_streaming_decontamination_matches_batch(spark, tmp_path):
     """The decontamination scan is streaming-compatible AS-IS: the
     map + broadcast-join plan (no aggregation, no state) runs under

@@ -47,17 +47,48 @@ def test_materialized_equals_in_session(spark, line_docs, tmp_path):
 def test_run_leaves_no_cached_frame(spark, line_docs, tmp_path):
     """Each tier's operator-internal persists (line dedup's lines, pack's
     bucket base) are released after the tier's write: a run adds no
-    cached RDD to the session."""
+    cached RDD to the session and leaves the session's cached frames
+    exactly as they were, a caller's cache of the run's own tier-1 input
+    among them.
 
-    def cached():
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    Cached frames are the CacheManager's entries, compared by identity:
+    an unpersist of an equal plan removes an entry, and a rebuild of one
+    that contains it replaces the entry. Cached RDDs are compared by id,
+    not by count: RDD-level caches that nothing references any more
+    (test_cluster's localCheckpoint rounds) are dropped by the context
+    cleaner after any JVM GC, which may fall inside the run."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
 
-    before = cached()
+    jvm = spark.sparkContext._jvm
+
+    def cached_rdds():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    def cached_frames():
+        # the CacheManager has no public listing of its entries
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        field = cm.getClass().getDeclaredField("cachedData")
+        field.setAccessible(True)
+        entries = field.get(cm).iterator()
+        ids = []
+        while entries.hasNext():
+            ids.append(jvm.System.identityHashCode(entries.next()))
+        return ids
+
+    # the exact plan run_corpus_pipeline builds as its tier-1 input
+    mine = line_docs.select(F.col("doc_id"), F.col("text").alias("text"))
+    mine = mine.persist(StorageLevel.MEMORY_AND_DISK)
+    mine.count()
+    rdds_before, frames_before = cached_rdds(), cached_frames()
     out = run_corpus_pipeline(
         spark, line_docs, str(tmp_path / "cp"), NEEDLES, k_span=40, floor=0.3
     )
     assert out.count() > 0
-    assert cached() == before
+    assert cached_rdds() <= rdds_before
+    assert cached_frames() == frames_before
+    assert mine.storageLevel == StorageLevel.MEMORY_AND_DISK
+    mine.unpersist()
 
 
 def test_resume_skips_completed_tiers(spark, line_docs, tmp_path):

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from langid_py_spark import config as C
 from langid_py_spark.core.lm import TrigramLM
 from langid_py_spark.core.model import DEFAULT_MODEL_PATH, NBModel
-from langid_py_spark.spark.pipeline import full_pipeline, read_manifest, run_pipeline
+from langid_py_spark.spark.manifest import read_manifest
+from langid_py_spark.spark.pipeline import full_pipeline, run_pipeline
 from langid_py_spark.spark.rules import python_rule_oracle
 from langid_py_spark.spark.scrub import python_scrub_oracle
 
@@ -458,3 +459,18 @@ def test_input_id_is_stable_across_sessions(spark, fixture_path):
     assert wide == input_id(t.selectExpr(*cols))
     assert spark.conf.get("spark.sql.debug.maxToStringFields") == max_fields
     assert wide_other != wide
+
+
+def test_fileless_frame_refuses_to_resume(spark, tmp_path):
+    """A createDataFrame frame reads no files, and its canonical plan is
+    the same whatever its rows are, so nothing identifies it in another
+    session: a resume onto an existing manifest raises, a first run and
+    resume=False do not."""
+    from langid_py_spark.spark.manifest import resume_manifest, write_manifest
+
+    df = spark.createDataFrame([(1, "a")], "id long, text string")
+    out = str(tmp_path)
+    write_manifest(out, resume_manifest(out, df, [], resume=True))
+    with pytest.raises(ValueError, match="no input files cannot be identified"):
+        resume_manifest(out, df, [], resume=True)
+    assert "params_fp" in resume_manifest(out, df, [], resume=False)

@@ -9,17 +9,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from langid_py_spark.core.corpora import LANGS, make_doc
+from langid_py_spark.core.corpora import make_doc
 from langid_py_spark.operators.quality_classifier import (
     FEATURE_NAMES,
     feature_cols,
     feature_py,
     feature_sql,
-    fit_numpy,
-    fit_quality_classifier,
     load_weights,
     score_quality_classifier,
-    with_quality_probability,
 )
 
 HOSTILE = [
@@ -110,41 +107,36 @@ def test_committed_weights_separate_heldout_corpora(spark):
     )
     np.testing.assert_array_equal(got["clf_keep"].values, z > 0)
     np.testing.assert_allclose(got["clf_score"].values, np.round(z, 6), atol=1e-9)
-    prob = with_quality_probability(
-        score_quality_classifier(docs)
-    ).toPandas()
-    assert ((prob["clf_prob"] > 0.5) == (prob["clf_score"] > 0)).all()
-    assert prob["clf_prob"].between(0, 1).all()
 
 
-def test_distributed_fit_matches_numpy_twin(spark):
-    """The Spark full-batch GD trainer (one Catalyst aggregation per
-    iteration over a persisted feature frame) must agree with the NumPy
-    twin run with the same hyperparameters: same predictions, close
-    weights (float association differs across partitions — that is why
-    the COMMITTED artifact comes from the NumPy side)."""
-    rng = np.random.RandomState(7)
-    texts, y = [], []
-    for lang in ("en", "de", "fr", "zh", "ru"):
-        for _ in range(60):
-            texts.append(make_doc(rng, lang, 3))
-            y.append(1.0 if lang == "en" else 0.0)
-    y = np.array(y)
-    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts, "y": y})
-    docs = spark.createDataFrame(pdf)
+def test_numpy_fit_reproduces_committed_weights():
+    """fit_numpy on the trainer's own corpus (scripts/train_quality_clf.py,
+    training seed) reproduces the committed artifact: same bias and
+    weights up to float rounding, same recorded rows and accuracy. A
+    change to the trainer or the feature twin that would alter the
+    weights shows here before anyone regenerates the artifact."""
+    import json
+    import sys
+    from pathlib import Path
 
-    b_np, w_np = fit_numpy(
-        np.vstack([feature_py(t) for t in texts]), y, lr=0.5, iters=40
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from train_quality_clf import build_corpus
+
+    from langid_py_spark.operators.quality_classifier import (
+        DEFAULT_CLF_PATH,
+        fit_numpy,
     )
-    b_sp, w_sp = fit_quality_classifier(
-        docs, label=F.col("y"), lr=0.5, iters=40
-    )
+
+    texts, y = build_corpus()
     X = np.vstack([feature_py(t) for t in texts])
-    z_np = X @ w_np + b_np
-    z_sp = X @ w_sp + b_sp
-    assert ((z_np > 0) == (z_sp > 0)).mean() >= 0.99
-    np.testing.assert_allclose(z_sp, z_np, rtol=1e-5, atol=1e-5)
-    acc = ((z_sp > 0) == (y > 0.5)).mean()
+    bias, w = fit_numpy(X, y)
+    want_bias, want_w = load_weights()
+    np.testing.assert_allclose(bias, want_bias, rtol=1e-9)
+    np.testing.assert_allclose(w, want_w, rtol=1e-9, atol=1e-12)
+    art = json.load(open(DEFAULT_CLF_PATH))
+    assert art["train_rows"] == len(texts)
+    acc = float(((X @ w + bias > 0) == (y > 0.5)).mean())
+    assert acc == pytest.approx(art["train_accuracy"], abs=1e-12)
     assert acc >= 0.9, acc
 
 

@@ -1,9 +1,8 @@
 """Edge-input robustness: hostile unicode through the full pipeline,
-empty inputs, null columns, watermarked streaming aggregation."""
+empty inputs, null columns."""
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 WEIRD = [
     "normal text here with words",
@@ -78,63 +77,3 @@ def test_null_tool_and_text(spark):
     rows = score_turns(spark.createDataFrame(pdf)).collect()
     assert rows[0]["nbytes"] == 0 and rows[0]["r_empty"]
     assert not rows[0]["keep"]
-
-
-def test_streaming_watermarked_window_counts(spark, fixture_path, tmp_path):
-    from langid_py_spark.streaming.stream_pipeline import (
-        read_transcript_stream,
-        windowed_lang_counts,
-    )
-
-    # the cached fixture is a single parquet file = one micro-batch; the
-    # watermark only advances BETWEEN batches, so respread it into 4
-    # files appended sequentially in EVENT-TIME order (mtime+path order
-    # => in-order arrival, no late drops). Fixture spans ~50 min →
-    # 10-minute windows + 10-minute watermark seal several windows.
-    import time as _time
-
-    src = str(tmp_path / "stream_src")
-    pdf_all = (
-        spark.read.parquet(fixture_path)
-        .toPandas()
-        .sort_values(["ts", "conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    n = len(pdf_all)
-    for i in range(4):
-        chunk = pdf_all.iloc[i * n // 4 : (i + 1) * n // 4]
-        spark.createDataFrame(chunk).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # distinct mtimes -> stable discovery order
-    counts = windowed_lang_counts(
-        read_transcript_stream(spark, src, max_files_per_trigger=1),
-        window="10 minutes",
-        watermark="10 minutes",
-    )
-    q = (
-        counts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "win_out"))
-        .option("checkpointLocation", str(tmp_path / "win_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(str(tmp_path / "win_out"))
-    # append mode emits only windows sealed by the watermark; the last
-    # window(s) stay pending — compare against batch on the emitted set
-    from langid_py_spark.spark.pipeline import score_turns
-
-    batch = (
-        score_turns(spark.read.parquet(fixture_path))
-        .groupBy(F.window("ts", "10 minutes"), F.col("lang"))
-        .agg(F.count("*").alias("n_turns"))
-    )
-    g = got.select(
-        F.col("window.start").alias("ws"), "lang", "n_turns"
-    ).toPandas()
-    b = batch.select(
-        F.col("window.start").alias("ws"), "lang", "n_turns"
-    ).toPandas()
-    merged = g.merge(b, on=["ws", "lang"], suffixes=("_s", "_b"), how="left")
-    assert len(g) > 0
-    assert (merged["n_turns_s"] == merged["n_turns_b"]).all()

@@ -5,6 +5,7 @@ full fixture plus adversarial strings (SURVEY.md §7 hard part #3)."""
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from langid_py_spark import config as C
 from langid_py_spark.spark.rules import (
@@ -17,7 +18,7 @@ from langid_py_spark.spark.rules import (
 from langid_py_spark.spark.scrub import (
     duckdb_scrub_sql,
     python_scrub_oracle,
-    with_scrubbed,
+    scrub_expr,
 )
 
 ADVERSARIAL = [
@@ -77,7 +78,8 @@ def scored(spark, fixture_path) -> pd.DataFrame:
     )
     df = df.select(*extra.columns).unionByName(extra)
     return (
-        with_scrubbed(with_rules(df), "text")
+        with_rules(df)
+        .withColumn("scrubbed_text", scrub_expr(F.col("text")))
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
@@ -133,7 +135,9 @@ def test_scrub_never_increases_pii_hits():
 
 def test_rules_and_scrub_are_codegen_only(spark, fixture_path):
     """No BatchEvalPython / ArrowEvalPython in the rules+scrub plan."""
-    df = with_scrubbed(with_rules(spark.read.parquet(fixture_path)), "text")
+    df = with_rules(spark.read.parquet(fixture_path)).withColumn(
+        "scrubbed_text", scrub_expr(F.col("text"))
+    )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert "Exchange" not in plan

@@ -79,100 +79,6 @@ def test_corpus_tree_feeds_training(spark, corpus_tree):
     assert cand.count() == 40  # 20 per order x 2 orders
 
 
-def test_read_jsonl_docs(spark, tmp_path):
-    """JSONL ingest: documents shape out, corrupt lines quarantined in
-    _corrupt (never silently dropped), explicit schema (no inference),
-    deterministic ids, id_field passthrough; the scored pipeline runs
-    directly on the result."""
-    import json
-
-    from langid_py_spark.sources.files import read_jsonl_docs
-
-    p = tmp_path / "corpus.jsonl"
-    dup_line = json.dumps({"text": "hello world document", "lang": "en", "source": "web"})
-    lines = [
-        dup_line,
-        json.dumps({"text": "ein deutsches dokument", "lang": "de", "source": "web"}),
-        json.dumps({"text": None, "lang": "en", "source": "x"}),
-        '{"text": "unterminated',               # corrupt
-        "not json at all",                       # corrupt
-        json.dumps({"text": "日本語のテキスト 😀", "lang": "ja", "source": "cc"}),
-        dup_line,                                # byte-identical duplicate line
-    ]
-    p.write_text("\n".join(lines), encoding="utf-8")
-
-    # no materialization workaround needed: _corrupt is an ordinary
-    # computed column (from_json), not the raw-scan corrupt record
-    df = read_jsonl_docs(spark, str(p))
-    rows = df.collect()
-    assert len(rows) == 7
-    # POSITIONAL ids: byte-identical duplicate lines keep DISTINCT ids
-    # (a content-hash id would collide and make exact-dedup's anti-join
-    # delete both copies — review r05)
-    assert len({r["doc_id"] for r in rows}) == 7
-    assert set(df.columns) == {"doc_id", "text", "lang", "source", "n_chars", "_corrupt"}
-    good = [r for r in rows if r["_corrupt"] is None]
-    bad = [r for r in rows if r["_corrupt"] is not None]
-    assert len(bad) == 2 and len(good) == 5
-    # corrupt rows carry their positional id, never a NULL key
-    assert all(r["doc_id"] is not None for r in bad)
-    assert {r["lang"] for r in good} == {"en", "de", "ja", None} or {
-        r["lang"] for r in good
-    } == {"en", "de", "ja"}
-    texts = {r["text"] for r in good}
-    assert "日本語のテキスト 😀" in texts
-    # null-text row survives with n_chars 0
-    assert any(r["text"] is None and r["n_chars"] == 0 for r in good)
-    # deterministic ids on re-read
-    again = {r["doc_id"] for r in read_jsonl_docs(spark, str(p)).collect()}
-    assert {r["doc_id"] for r in rows} == again
-
-    # numeric id passthrough
-    p2 = tmp_path / "withid.jsonl"
-    p2.write_text(
-        "\n".join(
-            json.dumps({"text": f"doc {i}", "my_id": i, "lang": "en", "source": "s"})
-            for i in range(5)
-        )
-    )
-    df2 = read_jsonl_docs(spark, str(p2), id_field="my_id")
-    assert {r["doc_id"] for r in df2.collect()} == set(range(5))
-
-    # STRING/UUID ids must not be force-cast by the parser (that would
-    # quarantine the whole corpus as corrupt — review r05): id_kind=
-    # 'string' hashes them; id_kind='long' on non-numeric ids falls
-    # back to the positional id instead of NULL
-    p3 = tmp_path / "striid.jsonl"
-    p3.write_text(
-        "\n".join(
-            json.dumps({"text": f"doc {i}", "my_id": f"uuid-{i}", "lang": "en", "source": "s"})
-            for i in range(5)
-        )
-    )
-    df3 = read_jsonl_docs(spark, str(p3), id_field="my_id", id_kind="string")
-    r3 = df3.collect()
-    assert all(x["_corrupt"] is None for x in r3)
-    assert len({x["doc_id"] for x in r3}) == 5
-    df3b = read_jsonl_docs(spark, str(p3), id_field="my_id", id_kind="long")
-    r3b = df3b.collect()
-    assert all(x["_corrupt"] is None and x["doc_id"] is not None for x in r3b)
-    assert len({x["doc_id"] for x in r3b}) == 5
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        read_jsonl_docs(spark, str(p3), id_field="my_id", id_kind="uuid")
-
-    # the engine runs on the ingested shape end-to-end (score + rules)
-    from pyspark.sql import functions as F
-
-    from langid_py_spark.spark.scorer import with_language
-
-    scored = with_language(df.filter(F.col("_corrupt").isNull())).select(
-        "doc_id", "ld.lang"
-    )
-    assert scored.count() == 5
-
-
 # --- S4 URL-fetch source (r06: read_url_docs) ---
 
 
